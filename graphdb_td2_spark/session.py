@@ -7,8 +7,8 @@ Arrow on (vectorized Python interchange), UTC session timezone (deterministic
 timestamp semantics for the DuckDB oracle).
 
 Scale posture: ``spark.sql.shuffle.partitions`` defaults to the local core
-count for tests; on a real cluster it should be set to 2-3× total cores (or
-left to AQE coalescing, which is enabled).
+count (see ``get_spark`` for why there is no floor); on a real cluster it
+should be set to 2-3× total cores.
 """
 
 from __future__ import annotations
@@ -30,11 +30,19 @@ def get_spark(
     Honors ``SPARK_GRAFT_CPUS`` (driver contract) for local parallelism.
     All settings are safe on a real cluster: AQE, skew-join handling and
     Arrow are cluster-side best practice, not local-mode hacks.
+
+    ``shuffle_partitions`` defaults to ``cpus`` with no floor. AQE-on plans
+    coalesce their shuffles whatever the width, but the frames
+    ``cached_graph`` persists and the AQE-off plans ``static_planning``
+    runs without a width of its own (the counts in ``prepare_fp_graph``)
+    keep the width they were planned at, so the default must already fit
+    the machine; a floor above the core count only schedules idle tasks
+    in those stages.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 32)
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from ..functions.text import tokens_col
 
 N_HASHES = 16
@@ -193,9 +194,6 @@ def capped_band_buckets(
 # (Catalyst does not reuse those exchanges — measured, not assumed). At
 # 100 TB this is the signature/bucket table a dedup pipeline lands as a
 # lake artifact next to the shingle table.
-_BUCKET_CACHE: dict[tuple[str, str, int, int, int], DataFrame] = {}
-
-
 def cached_capped_buckets(
     spark: SparkSession,
     sf_dir: str,
@@ -206,17 +204,9 @@ def cached_capped_buckets(
     """Persisted (doc_id, band, bucket) with degenerate buckets dropped."""
     from .shingles import cached_doc_shingles  # local import: avoids cycle
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        n_hashes,
-        n_bands,
-        bucket_cap,
-    )
-    df = _BUCKET_CACHE.get(key)
-    if df is None:
+    def build():
         shingles = cached_doc_shingles(spark, sf_dir)
-        df = capped_band_buckets(
+        return capped_band_buckets(
             band_buckets(
                 signatures_from_shingles(shingles, n_hashes=n_hashes),
                 n_hashes=n_hashes,
@@ -224,8 +214,9 @@ def cached_capped_buckets(
             ),
             cap=bucket_cap,
         ).persist()
-        _BUCKET_CACHE[key] = df
-    return df
+
+    key = ("capped_buckets", sf_dir.rstrip("/"), n_hashes, n_bands, bucket_cap)
+    return memo(spark, key, build)
 
 
 def minhash_lsh_pairs(

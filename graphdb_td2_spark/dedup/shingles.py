@@ -18,10 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from ..io import read_table
 from .minhash import SHINGLE_K, _shingles
-
-_SHINGLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 
 def cached_doc_shingles(
@@ -29,9 +28,8 @@ def cached_doc_shingles(
 ) -> DataFrame:
     """Persisted ``(doc_id, shingle)`` — distinct k-token shingles of
     ``documents.text``, exploded one row per shingle."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), k)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
+
+    def build():
         docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"]).repartition(
             spark.sparkContext.defaultParallelism
         )
@@ -39,7 +37,7 @@ def cached_doc_shingles(
         # the array size BEFORE exploding — narrow, no shuffle) so Jaccard
         # consumers never need a per-document size join: at corpus scale a
         # per-doc lookup table is neither broadcastable nor free to shuffle.
-        df = (
+        return (
             docs.select("doc_id", _shingles(F.col("text"), k).alias("__sh"))
             .select(
                 "doc_id",
@@ -48,5 +46,5 @@ def cached_doc_shingles(
             )
             .persist()
         )
-        _SHINGLE_CACHE[key] = df
-    return df
+
+    return memo(spark, ("doc_shingles", sf_dir.rstrip("/"), k), build)

@@ -58,9 +58,9 @@ TFIDF_TOPK = 30
 
 def tfidf_weights(docs: DataFrame, df_cap: int = TFIDF_DF_CAP) -> DataFrame:
     """``(doc_id, w, wt)`` under the df-capped vocabulary — the sparse
-    document vectors. Exposed so the sf1 cap A/B (``tools/tfidf_cap_ab``)
-    and adversarial fixtures can measure join fan-out on the shipped
-    plan rather than a re-implementation."""
+    document vectors. Exposed so the sf1 cap A/B (``tools/tfidf_cap_ab.py``
+    in git history) and adversarial fixtures can measure join fan-out on
+    the shipped plan rather than a re-implementation."""
     n_docs = docs.select(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )

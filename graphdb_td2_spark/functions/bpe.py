@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from ..io import read_table
 from .text import tokens_col
 
@@ -83,22 +84,14 @@ def word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the cached_doc_shingles policy: the corpus scan + tokenize + explode +
 # count shuffle is a pure function of the documents table, and every
 # train_bpe call re-ran it (3 bench runs × the full corpus pass).
-_VOCAB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _cached_base_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..caching import evict_stopped
-
-    evict_stopped(_VOCAB_CACHE, lambda df: df.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    w = _VOCAB_CACHE.get(key)
-    if w is None:
+    def build():
         w = word_counts(spark, sf_dir).select(
             "word", "cnt", chars_col(F.col("word")).alias("syms")
         )
-        w = w.localCheckpoint()  # truncate the corpus scan out of round lineage
-        _VOCAB_CACHE[key] = w
-    return w
+        return w.localCheckpoint()  # truncate the corpus scan out of round lineage
+
+    return memo(spark, ("base_vocab", sf_dir.rstrip("/")), build)
 
 
 _PAIRS_EXPR = (

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from .checkpointing import graph_partitions, static_planning, truncate_lineage
 from .pagerank import FP_SCALE
 
@@ -85,23 +86,18 @@ def prepare_hits_graph(edges: DataFrame) -> PreparedHITSGraph:
     return PreparedHITSGraph(verts, n_vertices, parts, e_src, e_dst)
 
 
-_HITS_CACHE: dict = {}
-
-
 def cached_hits_graph(spark: SparkSession, sf_dir: str) -> PreparedHITSGraph:
     """Session-cached loop shape of the full property graph (the
     ``cached_und_edges`` policy)."""
-    from ..caching import evict_stopped
     from .queries import cached_graph
 
-    evict_stopped(_HITS_CACHE, lambda p: p.verts.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    prepared = _HITS_CACHE.get(key)
-    if prepared is None:
-        g = cached_graph(spark, sf_dir)
-        prepared = prepare_hits_graph(g.edges.select("src", "dst"))
-        _HITS_CACHE[key] = prepared
-    return prepared
+    return memo(
+        spark,
+        ("hits_graph", sf_dir.rstrip("/")),
+        lambda: prepare_hits_graph(
+            cached_graph(spark, sf_dir).edges.select("src", "dst")
+        ),
+    )
 
 
 def hits_fp(

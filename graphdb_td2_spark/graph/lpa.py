@@ -24,36 +24,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..caching import memo
 from .checkpointing import resolve_broadcast_state, truncate_lineage
-from .queries import cached_graph
+from .queries import cached_graph, cached_und_edges, cached_vertex_count
 
 DEFAULT_ROUNDS = 4  # fixed — both engines run exactly this many
 
 # Final-label frames are expensive (4 shuffle rounds) and consumed by TWO
 # registry entries (community_sizes, community_modularity) — cache per
-# (session, corpus, rounds) like the recs-side _cached_view.
-_LABEL_CACHE: dict = {}
-
-
+# (session, corpus, rounds).
 def _cached_labels(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
-    from ..caching import evict_stopped
-
-    evict_stopped(_LABEL_CACHE, lambda df: df.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), rounds)
-    lp = _LABEL_CACHE.get(key)
-    if lp is None:
+    def build():
         g = cached_graph(spark, sf_dir)
-        from .queries import cached_und_edges, cached_vertex_count
-
-        lp = label_propagation(
+        return label_propagation(
             g.vertices,
             g.edges,
             rounds=rounds,
             und=cached_und_edges(spark, sf_dir),
             n_vertices=cached_vertex_count(spark, sf_dir),
         ).persist()
-        _LABEL_CACHE[key] = lp
-    return lp
+
+    return memo(spark, ("labels", sf_dir.rstrip("/"), rounds), build)
 
 
 def label_propagation(

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..caching import evict_stopped
+from ..caching import memo
 from ..io import load_tables, read_table
 from .build import GraphFrames, build_graph, event_typed_dedup
 from .pagerank import (
@@ -18,89 +18,63 @@ from .pagerank import (
     personalized_pagerank_fp,
 )
 
-# Session-scoped graph memo: four inventory queries share one E2-E9 build
-# instead of re-deriving it (the build is ~4 joins + unions — the dominant
-# cost of every graph query). Keyed by (application, sf_dir); frames are
-# persisted MEMORY_AND_DISK so a 100 TB graph spills instead of OOMing —
-# the same posture a production session would take (or a materialized
-# vertices/edges table on the lake).
-_GRAPH_CACHE: dict[tuple[str, str], GraphFrames] = {}
-
-
+# Four inventory queries share one E2-E9 build instead of re-deriving it
+# (the build is ~4 joins + unions — the dominant cost of every graph
+# query). Frames are persisted MEMORY_AND_DISK so a 100 TB graph spills
+# instead of OOMing — the same posture a production session would take
+# (or a materialized vertices/edges table on the lake).
 def cached_graph(spark: SparkSession, sf_dir: str) -> GraphFrames:
-    evict_stopped(_GRAPH_CACHE, lambda g: g.vertices.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    g = _GRAPH_CACHE.get(key)
-    if g is None:
+    def build():
         g = build_graph(load_tables(spark, sf_dir))
-        g = GraphFrames(vertices=g.vertices.persist(), edges=g.edges.persist())
-        _GRAPH_CACHE[key] = g
-    return g
+        return GraphFrames(vertices=g.vertices.persist(), edges=g.edges.persist())
 
-
-_UND_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return memo(spark, ("graph", sf_dir.rstrip("/")), build)
 
 
 def cached_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted distinct UNDIRECTED ``(src, dst)`` relation of the
     property graph — the derived lake artifact every undirected iterative
     algorithm (components, BFS, LPA) starts from. Built once per
-    (session, corpus) like ``cached_graph``: each caller used to run the
-    same union+distinct shuffle and pin its own copy per call, which at
-    100 TB is re-deriving a standard lake table on every query.
+    (session, corpus) like ``cached_graph``.
 
-    Since r13 the artifact is LOOP-SHAPED: hash-partitioned by ``src``
-    into the shared ``graph_partitions`` budget BEFORE the persist, so
-    the cached columnar relation's outputPartitioning satisfies the
-    iterative consumers' src-keyed joins exchange-free (cached plans are
-    exempt from AQE output-partitioning re-planning) while scans stay on
-    the fast InMemoryRelation path."""
-    evict_stopped(_UND_CACHE, lambda df: df.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    df = _UND_CACHE.get(key)
-    if df is None:
+    The artifact is LOOP-SHAPED: hash-partitioned by ``src`` into the
+    shared ``graph_partitions`` budget BEFORE the persist, so the cached
+    columnar relation's outputPartitioning satisfies the iterative
+    consumers' src-keyed joins exchange-free (cached plans are exempt
+    from AQE output-partitioning re-planning) while scans stay on the
+    fast InMemoryRelation path."""
+
+    def build():
         e = cached_graph(spark, sf_dir).edges.select("src", "dst")
         und = e.union(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct()
-        df = und.repartition(property_graph_parts(spark, sf_dir), "src").persist()
-        _UND_CACHE[key] = df
-    return df
+        return und.repartition(property_graph_parts(spark, sf_dir), "src").persist()
 
-
-# |V| of the property graph per (session, corpus) — the broadcast-state
-# dispatch input for components/LPA/BFS/SSSP entry points. One count job
-# over the persisted cached_graph vertices on first use, free after
-# (VERDICT-r9 task 6 posture: the dispatch must not re-count per call).
-# Plain ints keyed like _GRAPH_CACHE; stale sessions cost nothing to keep,
-# but prune anyway for symmetry with the frame caches.
-_VERTEX_COUNT_CACHE: dict[tuple[str, str], tuple[SparkSession, int]] = {}
+    return memo(spark, ("und_edges", sf_dir.rstrip("/")), build)
 
 
 def cached_vertex_count(spark: SparkSession, sf_dir: str) -> int:
-    evict_stopped(_VERTEX_COUNT_CACHE, lambda v: v[0])
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    hit = _VERTEX_COUNT_CACHE.get(key)
-    if hit is None:
-        hit = (spark, cached_graph(spark, sf_dir).vertices.count())
-        _VERTEX_COUNT_CACHE[key] = hit
-    return hit[1]
-
-
-_EDGE_COUNT_CACHE: dict[tuple[str, str], tuple[SparkSession, int]] = {}
+    """|V| of the property graph per (session, corpus) — the
+    broadcast-state dispatch input for components/LPA/BFS/SSSP entry
+    points: one count job over the persisted vertices on first use, free
+    after (the dispatch must not re-count per call)."""
+    return memo(
+        spark,
+        ("vertex_count", sf_dir.rstrip("/")),
+        lambda: cached_graph(spark, sf_dir).vertices.count(),
+    )
 
 
 def cached_edge_count(spark: SparkSession, sf_dir: str) -> int:
     """|E| of the property graph per (session, corpus) — with |V| it
     sizes the shared co-partitioned loop budget (one count job over the
     persisted edges on first use, free after)."""
-    evict_stopped(_EDGE_COUNT_CACHE, lambda v: v[0])
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    hit = _EDGE_COUNT_CACHE.get(key)
-    if hit is None:
-        hit = (spark, cached_graph(spark, sf_dir).edges.count())
-        _EDGE_COUNT_CACHE[key] = hit
-    return hit[1]
+    return memo(
+        spark,
+        ("edge_count", sf_dir.rstrip("/")),
+        lambda: cached_graph(spark, sf_dir).edges.count(),
+    )
 
 
 def property_graph_parts(spark: SparkSession, sf_dir: str) -> int:
@@ -204,16 +178,10 @@ def graph_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the cached_und_edges policy applied to the power-iteration consumers:
 # vertex set + out-degree-folded edges are pure functions of the corpus,
 # re-derived per call they cost more than the 5 iterations they feed.
-_FP_GRAPH_CACHE: dict = {}
-
-
 def cached_fp_graph(spark: SparkSession, sf_dir: str, weighted: bool = False):
     from .pagerank import prepare_fp_graph
 
-    evict_stopped(_FP_GRAPH_CACHE, lambda p: p.vertices.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), weighted)
-    prepared = _FP_GRAPH_CACHE.get(key)
-    if prepared is None:
+    def build():
         g = cached_graph(spark, sf_dir)
         if weighted:
             edges = g.edges.select(
@@ -223,11 +191,10 @@ def cached_fp_graph(spark: SparkSession, sf_dir: str, weighted: bool = False):
                 .cast("long")
                 .alias("w"),
             )
-            prepared = prepare_fp_graph(edges, weight="w")
-        else:
-            prepared = prepare_fp_graph(g.edges.select("src", "dst"))
-        _FP_GRAPH_CACHE[key] = prepared
-    return prepared
+            return prepare_fp_graph(edges, weight="w")
+        return prepare_fp_graph(g.edges.select("src", "dst"))
+
+    return memo(spark, ("fp_graph", sf_dir.rstrip("/"), weighted), build)
 
 
 def pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from .checkpointing import static_planning, truncate_lineage
 from .queries import cached_graph, cached_vertex_count, property_graph_parts
 
@@ -56,20 +57,13 @@ def _undirected_min_edges(edges_w: DataFrame) -> DataFrame:
     )
 
 
-_WUND_CACHE: dict = {}
-
-
 def cached_weighted_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached loop-shaped symmetrized min-weight adjacency of the
     property graph — partitioned by ``src`` into ``state_partitions(|V|)``
     with truncated lineage (the ``cached_und_edges`` policy applied to
     the weighted twin every ``sssp_top20`` call used to re-derive)."""
-    from ..caching import evict_stopped
 
-    evict_stopped(_WUND_CACHE, lambda df: df.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    df = _WUND_CACHE.get(key)
-    if df is None:
+    def build():
         g = cached_graph(spark, sf_dir)
         edges_w = g.edges.select(
             "src",
@@ -78,13 +72,13 @@ def cached_weighted_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("w"),
         )
-        df = (
+        return (
             _undirected_min_edges(edges_w)
             .repartition(property_graph_parts(spark, sf_dir), "src")
             .persist()
         )
-        _WUND_CACHE[key] = df
-    return df
+
+    return memo(spark, ("weighted_und_edges", sf_dir.rstrip("/")), build)
 
 
 def sssp_distances(

@@ -31,6 +31,7 @@ import functools
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from ..io import read_table
 
 N_STARTS = 20
@@ -38,24 +39,15 @@ WALKS_PER_START = 2
 WALK_LEN = 4  # hops beyond the start node
 
 
-_COPURCHASE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def cached_copurchase_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-persisted co-purchase adjacency — the derived lake table
     every copurchase-graph consumer (walks, MIS, HyperBall, Brandes,
     centrality) starts from, under the ``cached_graph`` /
     ``cached_und_edges`` policy: built once per (session, corpus) instead
-    of re-running the basket self-join + distinct per call. Also closes a
-    per-call persist leak: ``harmonic_centrality_top20`` pinned a fresh
-    copy per invocation and never released it."""
-    from ..caching import evict_stopped
+    of re-running the basket self-join + distinct per call."""
 
-    evict_stopped(_COPURCHASE_CACHE, lambda df: df.sparkSession)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    df = _COPURCHASE_CACHE.get(key)
-    if df is None:
-        # Loop-shaped since r13: hash-partitioned by src into the shared
+    def build():
+        # Loop-shaped: hash-partitioned by src into the shared
         # graph_partitions budget BEFORE the persist, so the cached
         # columnar relation's outputPartitioning satisfies the iterative
         # consumers' src-keyed joins exchange-free (cached plans are
@@ -70,9 +62,9 @@ def cached_copurchase_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw = copurchase_adjacency(spark, sf_dir)
         stats = copurchase_stats(spark, sf_dir)
         parts = graph_partitions(stats["n_vertices"], stats["n_edges"], raw)
-        df = raw.repartition(parts, "src").persist()
-        _COPURCHASE_CACHE[key] = df
-    return df
+        return raw.repartition(parts, "src").persist()
+
+    return memo(spark, ("copurchase_adjacency", sf_dir.rstrip("/")), build)
 
 
 def copurchase_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:

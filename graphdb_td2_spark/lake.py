@@ -46,15 +46,13 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .caching import memo
+
 N_LAKE_BUCKETS = 32
 
 # bump when the build logic changes semantically — invalidates every
 # manifest written under the old version
 _LAKE_FORMAT_VERSION = 3  # v3: content probe joined the fingerprint
-
-# (applicationId, sf_dir, what) -> table name, recorded only after this
-# session built OR fingerprint-validated the table
-_LAKE_CACHE: dict[tuple[str, str, str], str] = {}
 
 MANIFEST_NAME = "_lake_manifest.json"
 
@@ -191,10 +189,29 @@ def _ensure(
     src_tables: list[str],
     n_buckets: int = N_LAKE_BUCKETS,
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), what)
-    name = _LAKE_CACHE.get(key)
-    if name is not None:
-        return spark.table(name)
+    """The published table for ``what``, built or fingerprint-validated
+    once per session; the memo records the table name only after one of
+    the two succeeded."""
+    name = memo(
+        spark,
+        ("lake", sf_dir.rstrip("/"), what),
+        lambda: _publish(
+            spark, sf_dir, what, build, bucket_by, sort_by, src_tables, n_buckets
+        ),
+    )
+    return spark.table(name)
+
+
+def _publish(
+    spark: SparkSession,
+    sf_dir: str,
+    what: str,
+    build,
+    bucket_by: list[str],
+    sort_by: list[str],
+    src_tables: list[str],
+    n_buckets: int,
+) -> str:
     name = _table_name(sf_dir, what)
     fp = _fingerprint(spark, sf_dir, what, src_tables, bucket_by, sort_by, n_buckets)
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
@@ -207,8 +224,7 @@ def _ensure(
         # matches this corpus byte-for-byte provenance → reuse with ZERO
         # build jobs; only the catalog registration is per-process
         _register_external(spark, name, loc, manifest)
-        _LAKE_CACHE[key] = name
-        return spark.table(name)
+        return name
 
     # stale (corpus changed / params changed / half-built) or absent →
     # build into a per-application temp dir and publish by rename.
@@ -270,8 +286,7 @@ def _ensure(
             )
         manifest = winner
     _register_external(spark, name, loc, manifest)
-    _LAKE_CACHE[key] = name
-    return spark.table(name)
+    return name
 
 
 def items_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,6 +316,10 @@ def items_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_what(n_hashes: int, n_bands: int, bucket_cap: int) -> str:
+    return f"lsh{n_hashes}x{n_bands}c{bucket_cap}"
+
+
 def lsh_buckets_bucketed(
     spark: SparkSession,
     sf_dir: str,
@@ -326,17 +345,12 @@ def lsh_buckets_bucketed(
     return _ensure(
         spark,
         sf_dir,
-        f"lsh{n_hashes}x{n_bands}c{bucket_cap}",
+        _lsh_what(n_hashes, n_bands, bucket_cap),
         build,
         bucket_by=["band", "bucket"],
         sort_by=["band", "bucket", "doc_id"],
         src_tables=["documents"],
     )
-
-
-# (sf_dir, fingerprint) -> stats dict; process-wide (not per-app: the
-# stats are a pure function of the fingerprinted corpus)
-_STATS_CACHE: dict[tuple[str, str], dict] = {}
 
 
 def copurchase_stats(spark: SparkSession, sf_dir: str) -> dict:
@@ -350,9 +364,12 @@ def copurchase_stats(spark: SparkSession, sf_dir: str) -> dict:
     publishes the sidecar for every later process."""
     sf = sf_dir.rstrip("/")
     fp = _fingerprint(spark, sf, "copurchase_stats", ["lineitem"], [], [], 0)
-    cached = _STATS_CACHE.get((sf, fp))
-    if cached is not None:
-        return cached
+    return memo(
+        spark, ("lake_stats", sf, fp), lambda: _read_or_count_stats(spark, sf, fp)
+    )
+
+
+def _read_or_count_stats(spark: SparkSession, sf: str, fp: str) -> dict:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     digest = hashlib.md5(sf.encode()).hexdigest()[:8]
     loc = f"{warehouse}/_lake_stats_{digest}.json"
@@ -364,9 +381,7 @@ def copurchase_stats(spark: SparkSession, sf_dir: str) -> dict:
         finally:
             stream.close()
         if sidecar.get("fingerprint") == fp:
-            stats = {k: sidecar[k] for k in ("n_vertices", "n_edges")}
-            _STATS_CACHE[(sf, fp)] = stats
-            return stats
+            return {k: sidecar[k] for k in ("n_vertices", "n_edges")}
     from .graph.walks import copurchase_adjacency
 
     row = copurchase_adjacency(spark, sf).agg(
@@ -384,7 +399,6 @@ def copurchase_stats(spark: SparkSession, sf_dir: str) -> dict:
         )
     finally:
         out.close()
-    _STATS_CACHE[(sf, fp)] = stats
     return stats
 
 
@@ -398,12 +412,9 @@ def build_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     items_bucketed(spark, sf_dir)
     lsh_buckets_bucketed(spark, sf_dir, N_HASHES, N_BANDS, BUCKET_CAP)
     copurchase_stats(spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    sf = sf_dir.rstrip("/")
     return {
-        what: name
-        for (a, s, what), name in _LAKE_CACHE.items()
-        if a == app and s == sf
+        what: _table_name(sf_dir, what)
+        for what in ("items", _lsh_what(N_HASHES, N_BANDS, BUCKET_CAP))
     }
 
 

@@ -41,6 +41,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from ..io import read_table
 
 TOP_K = 10  # LIMIT 10 everywhere in the reference (app/main.py:57,77,95,116)
@@ -191,16 +192,8 @@ def customer_brand_fallback_core(
 # sf_dir) — the in-session analogue of the bucketed adjacency tables a
 # production deployment would maintain on the lake (see sources/sinks.py).
 
-_VIEW_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _cached_view(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
-    df = _VIEW_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _VIEW_CACHE[key] = df
-    return df
+    return memo(spark, ("view", sf_dir.rstrip("/"), name), lambda: build().persist())
 
 
 def _items(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import Window
 
+from ..caching import memo
 from ..io import read_table
 from ..functions.vectors import cosine_similarity_q, quantize_embedding
 
@@ -214,23 +215,7 @@ def ann_topk_ivf(
 # --- trained coarse quantizer (deterministic Lloyd k-means) ------------------
 
 KMEANS_ITER = 4
-
-
-# Trained-index memo (the r11-task-2 "index build is lake work" policy
-# that moved PQ corpus quantization into the bench ETL phase): centroids
-# are a deterministic pure function of the session-immutable corpus and
-# the training knobs, so retraining on every registry call re-ran n_iter
-# full corpus scans for byte-identical output. The memo holds DRIVER-side
-# rows (n_cells x dim longs - plain bytes, no pinned Spark resource),
-# keyed by session + caller-supplied corpus key + the corpus plan's
-# semanticHash + knobs; same immutable-corpus-per-session assumption as
-# similarity/pq.py _CORPUS_CACHE. The semanticHash term (ADVICE r12)
-# makes the key honest about the ACTUAL corpus argument: a caller
-# passing cache_key with a filtered/fixture/re-quantized corpus now gets
-# its own entry instead of silently receiving centroids trained on the
-# canonical corpus. Values carry their session and stopped-session
-# entries are pruned on access (ADVICE r12, the _CORPUS_CACHE pattern).
-_TRAINED_CENTROID_ROWS: dict[tuple, tuple] = {}
+_CENTROID_SCHEMA = "cent_id long, cent_qe array<long>"
 
 
 def train_ivf_centroids(
@@ -257,27 +242,35 @@ def train_ivf_centroids(
     longs) round-trip through the driver each iteration, which is both the
     classic k-means topology (MLlib does the same) and the lineage
     truncation that keeps iteration plans O(1).
-    """
-    schema = "cent_id long, cent_qe array<long>"
-    memo_key = None
-    if cache_key is not None:
-        from ..caching import evict_stopped
 
-        evict_stopped(_TRAINED_CENTROID_ROWS, lambda v: v[0])
+    Centroids are a deterministic function of the corpus and the knobs,
+    so with ``cache_key`` the trained rows (n_cells x dim longs,
+    driver-side, no pinned Spark resource) are memoized instead of
+    re-running n_iter corpus scans per call.
+    """
+    if cache_key is None:
+        rows = _ivf_centroid_rows(spark, corpus, n_cells, n_iter)
+    else:
         # cache_key names the quantized corpus of one sf_dir; the plan's
         # semanticHash ties the entry to the ACTUAL corpus argument, so a
         # non-canonical corpus (filtered, fixture, re-quantized) can never
         # be served centroids trained on a different frame
-        memo_key = (
-            spark.sparkContext.applicationId,
+        key = (
+            "ivf_centroids",
             cache_key.rstrip("/"),
             corpus.semanticHash(),
             n_cells,
             n_iter,
         )
-        hit = _TRAINED_CENTROID_ROWS.get(memo_key)
-        if hit is not None:
-            return spark.createDataFrame(hit[1], schema=schema)
+        rows = memo(
+            spark, key, lambda: _ivf_centroid_rows(spark, corpus, n_cells, n_iter)
+        )
+    return spark.createDataFrame(rows, schema=_CENTROID_SCHEMA)
+
+
+def _ivf_centroid_rows(
+    spark: SparkSession, corpus: DataFrame, n_cells: int, n_iter: int
+) -> list:
     dim_row = corpus.select(F.size("qe").alias("d")).first()
     dim = int(dim_row["d"])
     centroids = (
@@ -291,7 +284,7 @@ def train_ivf_centroids(
     }
     for _ in range(n_iter):
         cent_df = spark.createDataFrame(
-            [(i, v) for i, v in sorted(cent_rows.items())], schema=schema
+            [(i, v) for i, v in sorted(cent_rows.items())], schema=_CENTROID_SCHEMA
         )
         assigned = _assign_cells(corpus, cent_df)
         # element-wise integer mean per cell: exact long sums via
@@ -315,10 +308,7 @@ def train_ivf_centroids(
             assert len(r) == dim
         # empty cells keep their previous centroid
         cent_rows = {i: updated.get(i, v) for i, v in cent_rows.items()}
-    rows = [(i, v) for i, v in sorted(cent_rows.items())]
-    if memo_key is not None:
-        _TRAINED_CENTROID_ROWS[memo_key] = (spark, rows)
-    return spark.createDataFrame(rows, schema=schema)
+    return [(i, v) for i, v in sorted(cent_rows.items())]
 
 
 NPROBE = 2

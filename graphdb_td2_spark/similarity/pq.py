@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..caching import memo
 from ..io import read_table
 from ..functions.vectors import cosine_similarity_q, quantize_embedding
 
@@ -165,40 +166,21 @@ def _adc_rank(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-# Session-scoped quantized-corpus cache, the shared-lake-artifact idiom
-# (`dedup/minhash.py` _BUCKET_CACHE, `graph/queries.py` cached_graph): at
-# 100 TB the quantized vector table is a lake artifact materialized once,
-# and every PQ consumer (ivfpq, refined, recall/gain reports) serves from
-# it. One persisted corpus-sized frame per (session, sf_dir) — BOUNDED,
-# unlike the pre-r11 per-call persist that accumulated one pin per
-# invocation (ADVICE r10), and amortized, unlike a per-call
-# persist/unpersist that re-quantizes the corpus on every query (the r11
-# bench measured that at +3.5 s/call on ann_topk_ivfpq alone).
-#
-# ASSUMPTION (shared by every lake-artifact cache here): the embeddings
-# parquet under ``sf_dir`` is immutable for the session's lifetime — a
-# mid-session rewrite would serve stale persisted vectors. Entries whose
-# session has been STOPPED are evicted on access (ADVICE r11), so a
-# long-lived process cycling many sessions does not accumulate dead keys.
-_CORPUS_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
-
-
+# Quantized corpus: at 100 TB the quantized vector table is a lake
+# artifact materialized once, and every PQ consumer (ivfpq, refined,
+# recall/gain reports) serves from it. One persisted corpus-sized frame
+# per (session, sf_dir) — bounded, unlike a per-call persist that pins
+# one copy per invocation, and amortized, unlike a per-call
+# persist/unpersist that re-quantizes the corpus on every query
+# (measured at +3.5 s/call on ann_topk_ivfpq alone).
 def _cached_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # stopped-session pruning hoisted to caching.py in r13 — this cache
-    # introduced the pattern (ADVICE r11) and now shares the definition
-    from ..caching import evict_stopped
+    def build():
+        emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
+        return emb.select(
+            "vec_id", quantize_embedding(F.col("embedding")).alias("qe")
+        ).persist()
 
-    evict_stopped(_CORPUS_CACHE, lambda v: v[0])
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    hit = _CORPUS_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
-    df = emb.select(
-        "vec_id", quantize_embedding(F.col("embedding")).alias("qe")
-    ).persist()
-    _CORPUS_CACHE[key] = (spark, df)
-    return df
+    return memo(spark, ("quantized_corpus", sf_dir.rstrip("/")), build)
 
 
 def _ivfpq_scored(
@@ -433,15 +415,7 @@ def pq_refine_gain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PQ_TRAIN_ITER = 2  # Lloyd steps per subspace (unrolled in the oracle)
-
-
-# Trained-codebook memo - the similarity/ann.py _TRAINED_CENTROID_ROWS
-# policy applied to the PQ trainer: driver-side rows only, keyed by
-# session + corpus key + the corpus plan's semanticHash + knobs (the
-# hash term ties the entry to the actual corpus argument, ADVICE r12),
-# same immutable-corpus assumption as _CORPUS_CACHE above; values carry
-# their session and stopped-session entries are pruned on access.
-_TRAINED_CODEBOOK_ROWS: dict[tuple, tuple] = {}
+_CODEBOOK_SCHEMA = "m long, code_id long, sub array<long>"
 
 
 def train_pq_codebook(
@@ -474,24 +448,27 @@ def train_pq_codebook(
     M·k_sub·SUB_DIM rows, independent of corpus size. The tiny codebook
     (M·k_sub rows) round-trips through the driver per iteration, which
     is the classic k-means topology and the lineage truncation that
-    keeps iteration plans O(1)."""
-    memo_key = None
-    if cache_key is not None:
-        from ..caching import evict_stopped
+    keeps iteration plans O(1).
 
-        evict_stopped(_TRAINED_CODEBOOK_ROWS, lambda v: v[0])
-        memo_key = (
-            spark.sparkContext.applicationId,
-            cache_key.rstrip("/"),
-            corpus.semanticHash(),
-            k_sub,
-            n_iter,
+    With ``cache_key`` the trained rows (driver-side, no pinned Spark
+    resource) are memoized per corpus key, the corpus plan's
+    ``semanticHash`` — which ties the entry to the actual corpus argument
+    — and the knobs, as ``train_ivf_centroids`` does."""
+    if cache_key is None:
+        rows = _pq_codebook_rows(spark, corpus, k_sub, n_iter)
+    else:
+        key = (
+            "pq_codebook", cache_key.rstrip("/"), corpus.semanticHash(), k_sub, n_iter
         )
-        hit = _TRAINED_CODEBOOK_ROWS.get(memo_key)
-        if hit is not None:
-            return spark.createDataFrame(
-                hit[1], schema="m long, code_id long, sub array<long>"
-            )
+        rows = memo(
+            spark, key, lambda: _pq_codebook_rows(spark, corpus, k_sub, n_iter)
+        )
+    return spark.createDataFrame(rows, schema=_CODEBOOK_SCHEMA)
+
+
+def _pq_codebook_rows(
+    spark: SparkSession, corpus: DataFrame, k_sub: int, n_iter: int
+) -> list:
     init = (
         _subvectors(
             corpus.withColumn("h", F.md5(F.col("vec_id").cast("string")))
@@ -508,10 +485,10 @@ def train_pq_codebook(
     cw: dict[tuple[int, int], list[int]] = {
         (int(r["m"]), rank[r["vec_id"]]): list(r["sub"]) for r in init
     }
-    schema = "m long, code_id long, sub array<long>"
     for _ in range(n_iter):
         cb_df = spark.createDataFrame(
-            [(m, c, v) for (m, c), v in sorted(cw.items())], schema=schema
+            [(m, c, v) for (m, c), v in sorted(cw.items())],
+            schema=_CODEBOOK_SCHEMA,
         )
         assigned = pq_encode(corpus, cb_df)
         new_rows = (
@@ -533,10 +510,7 @@ def train_pq_codebook(
             (int(r["m"]), int(r["code"])): list(r["sub"]) for r in new_rows
         }
         cw = {k_: updated.get(k_, v) for k_, v in cw.items()}
-    rows = [(m, c, v) for (m, c), v in sorted(cw.items())]
-    if memo_key is not None:
-        _TRAINED_CODEBOOK_ROWS[memo_key] = (spark, rows)
-    return spark.createDataFrame(rows, schema=schema)
+    return [(m, c, v) for (m, c), v in sorted(cw.items())]
 
 
 def pq_trained_recall_report(

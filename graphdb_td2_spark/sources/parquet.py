@@ -17,6 +17,7 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..caching import memo
 from ..schemas import CORPUS, TABLE_NAMES
 
 log = logging.getLogger("graphdb_td2_spark")
@@ -26,28 +27,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# Session-scoped reader memo: resolving a parquet relation is a driver-side
-# footer read (~100 ms per table, ~1 s per load_tables call), and the
-# analytics surface re-resolves the same immutable corpus tables dozens of
-# times per session (measured: ~8-12 s of the 26-query bench was pure
-# re-resolution). The memo holds the *analyzed, normalized, unprojected*
-# DataFrame; per-query projections/filters layer on top, so Catalyst still
-# prunes and pushes down per query. Keyed by (application, path) — a new
-# session never sees a stale file listing. Callers that REWRITE a table
-# mid-session must call invalidate_read_cache(path) (the lake sinks manage
-# their own readers, so in practice only tests care).
-_READER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def invalidate_read_cache(path: str | None = None) -> None:
-    """Drop memoized reader relations (all of them, or one path's)."""
-    if path is None:
-        _READER_CACHE.clear()
-    else:
-        for key in [k for k in _READER_CACHE if k[1] == path]:
-            del _READER_CACHE[key]
-
-
 def _read_with_nanos_fallback(
     spark: SparkSession, path: str, name: str
 ) -> DataFrame:
@@ -55,10 +34,6 @@ def _read_with_nanos_fallback(
     for Spark's reader; fall back to ``nanosAsLong`` and convert ns→µs with
     exact integer division (``div 1000`` — the same truncation DuckDB
     applies when it narrows ns to its µs timestamps)."""
-    key = (spark.sparkContext.applicationId, path)
-    cached = _READER_CACHE.get(key)
-    if cached is not None:
-        return cached
     try:
         df = spark.read.parquet(path)
         df.schema  # force footer/schema resolution now
@@ -92,7 +67,6 @@ def _read_with_nanos_fallback(
                 df = df.withColumn(
                     field.name, F.col(field.name).cast("timestamp")
                 )
-    _READER_CACHE[key] = df
     return df
 
 
@@ -104,8 +78,17 @@ def read_table(
 ) -> DataFrame:
     """Scan one corpus table (A2/A4). ``columns`` is the explicit projection
     the reference writes into each SELECT (``app/etl.py:141-164``); Catalyst
-    prunes the parquet scan to exactly those columns."""
-    df = _read_with_nanos_fallback(spark, table_path(sf_dir, name), name)
+    prunes the parquet scan to exactly those columns.
+
+    Resolving a parquet relation is a driver-side footer read (~100 ms per
+    table), and the analytics surface re-resolves the same corpus tables
+    dozens of times per session, so the *analyzed, normalized,
+    unprojected* relation is memoized per path; the projection layers on
+    top, so Catalyst still prunes and pushes down per query."""
+    path = table_path(sf_dir, name)
+    df = memo(
+        spark, ("reader", path), lambda: _read_with_nanos_fallback(spark, path, name)
+    )
     if columns is not None:
         df = df.select(*columns)
     return df

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..caching import memo
 from ..io import read_table
 from ..schemas import CORPUS
 
@@ -90,19 +91,6 @@ def _events_read_schema(ts_unit: str) -> T.StructType:
     return T.StructType(fields)
 
 
-# (appId, source_dir, glob, staleness-token) -> detected unit. The footer
-# probe is a batch read job paid ONCE per corpus per session, not once per
-# stream start — at 8 finite-stream registry entries × 3 bench runs each,
-# the repeated probes were ~0.3 s/query of pure re-detection (r11 task 5).
-# The key carries a cheap (name, size, mtime) token over the matched files
-# (ADVICE r11): _detect_ts_unit exists precisely because the corpus
-# encoding has changed under the engine before, so a corpus regenerated
-# mid-session must re-probe instead of serving a stale unit that would
-# silently distort the time axis 1000×. On a real cluster this token is
-# the catalog's table version/snapshot id.
-_TS_UNIT_CACHE: dict[tuple, str] = {}
-
-
 def _source_staleness_token(source_dir: str, file_glob: str) -> tuple:
     """(name, size, mtime_ns) per matched file — driver-side metadata
     only, no data read; any rewrite of the source files changes it."""
@@ -127,19 +115,19 @@ def _detect_ts_unit(spark: SparkSession, source_dir: str, file_glob: str) -> str
     with a batch read of the same path+glob the stream will use. The corpus
     encoding has changed under the engine before (TIMESTAMP(NANOS) →
     tz-naive timestamp[us]); a hard-coded unit silently compresses or
-    stretches the time axis 1000×, so the unit must come from the data."""
-    key = (
-        spark.sparkContext.applicationId,
-        source_dir,
-        file_glob,
-        _source_staleness_token(source_dir, file_glob),
+    stretches the time axis 1000×, so the unit must come from the data.
+
+    The footer probe is a batch read job, so it is memoized per session.
+    The key carries a cheap (name, size, mtime) token over the matched
+    files, so a corpus regenerated mid-session re-probes instead of
+    serving a stale unit. On a real cluster this token is the catalog's
+    table version/snapshot id."""
+    token = _source_staleness_token(source_dir, file_glob)
+    return memo(
+        spark,
+        ("ts_unit", source_dir, file_glob, token),
+        lambda: _detect_ts_unit_uncached(spark, source_dir, file_glob),
     )
-    cached = _TS_UNIT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    unit = _detect_ts_unit_uncached(spark, source_dir, file_glob)
-    _TS_UNIT_CACHE[key] = unit
-    return unit
 
 
 def _detect_ts_unit_uncached(

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import memo
 from ..dedup.minhash import band_buckets, minhash_signatures
 from ..schemas import CORPUS
 
@@ -155,10 +156,6 @@ def maintained_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped state (one maintenance run per (application, sf_dir)).
-_STREAM_CACHE: dict[tuple[str, str], str] = {}
-
-
 def streaming_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: maintain the LSH candidate-pair set INCREMENTALLY
     (documents streamed in multi-file micro-batches) and return it. The
@@ -168,14 +165,14 @@ def streaming_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io import read_table
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    state_dir = _STREAM_CACHE.get(key)
-    if state_dir is None:
+    def build():
         docs = read_table(spark, sf_dir, "documents")
         root = tempfile.mkdtemp(prefix="spark_mh_stream_")
         stream_dir = f"{root}/stream"
         docs.repartition(4).write.parquet(stream_dir)
         state_dir = f"{root}/state"
         run_incremental_minhash(spark, stream_dir, state_dir)
-        _STREAM_CACHE[key] = state_dir
+        return state_dir
+
+    state_dir = memo(spark, ("minhash_stream_state", sf_dir.rstrip("/")), build)
     return maintained_pairs(spark, state_dir)

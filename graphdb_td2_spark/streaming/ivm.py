@@ -52,6 +52,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..caching import memo
+
 _ITEMS_SCHEMA = "order_id long, product_id long"
 _COUNTS_SCHEMA = "product_a long, product_b long, n_orders long"
 # On-disk segment schema, shared by both parts so one micro-batch commits
@@ -764,8 +766,8 @@ def run_incremental_cooccurrence(
     exit). AQE is disabled for the same reason: with the width pinned and
     every stage 16 tasks wide, runtime re-planning cannot improve the
     plan, but it splits each batch's one action into one JOB PER QUERY
-    STAGE — the r8 profile (tools/ivm_batch_profile.py) measured ~10
-    jobs/batch with task time under half the wall, the rest per-stage
+    STAGE — the r8 profile (tools/ivm_batch_profile.py, in git history)
+    measured ~10 jobs/batch with task time under half the wall, the rest per-stage
     scheduling gaps."""
     prev = {
         k: spark.conf.get(k)
@@ -914,11 +916,6 @@ def serve_customer_cf(
     )
 
 
-# Session-scoped IVM state (one maintenance run per (application, sf_dir);
-# registry re-invocations read the maintained view, they don't re-stream).
-_IVM_CACHE: dict[tuple[str, str], str] = {}
-
-
 def ensure_ivm_state(spark: SparkSession, sf_dir: str) -> str:
     """Maintained-state dir for a corpus: stream the lineitem corpus
     through once (single-file micro-batches) on first use, then every
@@ -930,17 +927,16 @@ def ensure_ivm_state(spark: SparkSession, sf_dir: str) -> str:
 
     from ..io import read_table
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    state_dir = _IVM_CACHE.get(key)
-    if state_dir is None:
+    def build():
         li = read_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_partkey"])
         root = tempfile.mkdtemp(prefix="spark_ivm_")
         stream_dir = f"{root}/stream"
         li.repartition(4).write.parquet(stream_dir)
         state_dir = f"{root}/state"
         run_incremental_cooccurrence(spark, stream_dir, state_dir, schema=li.schema)
-        _IVM_CACHE[key] = state_dir
-    return state_dir
+        return state_dir
+
+    return memo(spark, ("ivm_state", sf_dir.rstrip("/")), build)
 
 
 def ivm_cooccurrence_top20(

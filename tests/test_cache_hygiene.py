@@ -1,11 +1,17 @@
-"""Session-cache hygiene (ADVICE r12): stopped-session entries evict on
-access across every lake-artifact memo, and the trained-index memos key
-on the ACTUAL corpus argument (plan semanticHash), not just the caller's
+"""Session-cache hygiene: every derived artifact goes through
+``caching.memo``, whose builds are single flight and whose misses drop
+the entries of stopped sessions; the trained-index memos key on the
+ACTUAL corpus argument (plan semanticHash), not just the caller's
 cache_key string."""
 
 from __future__ import annotations
 
-from graphdb_td2_spark.caching import evict_stopped, session_stopped
+import sys
+import threading
+import time
+
+from graphdb_td2_spark import caching
+from graphdb_td2_spark.caching import memo, session_stopped
 
 
 class _DeadSession:
@@ -16,31 +22,74 @@ class _DeadSession:
         raise RuntimeError("stopped")
 
 
+class _StoppedSession:
+    """A session whose context reports an app id but is gone."""
+
+    class sparkContext:  # noqa: N801 - mimics SparkSession
+        applicationId = "dead-app"
+        _jsc = None
+
+
 def test_session_stopped_on_dead_session(spark):
     assert session_stopped(_DeadSession()) is True
+    assert session_stopped(_StoppedSession()) is True
     assert session_stopped(spark) is False
 
 
-def test_evict_stopped_drops_only_dead_entries(spark):
-    cache = {"dead": (_DeadSession(), 1), "live": (spark, 2)}
-    evict_stopped(cache, lambda v: v[0])
-    assert list(cache) == ["live"]
+def test_miss_drops_stopped_sessions_entries(spark, sf_dir, monkeypatch):
+    """A miss on any memoized artifact (here the /recs basket view) drops
+    every entry of a stopped session and keeps the live session's."""
+    from graphdb_td2_spark.recs.queries import _items
+
+    monkeypatch.setattr(caching, "_STORE", {})
+    memo(spark, ("live",), object)
+    memo(_StoppedSession(), ("x",), object)
+    memo(_StoppedSession(), ("y",), object)
+    assert {app for app, _ in caching._STORE} == {
+        "dead-app",
+        spark.sparkContext.applicationId,
+    }
+    _items(spark, sf_dir)
+    assert {app for app, _ in caching._STORE} == {spark.sparkContext.applicationId}
+    assert (spark.sparkContext.applicationId, ("live",)) in caching._STORE
 
 
-def test_lake_caches_prune_dead_sessions(spark, sf_dir, monkeypatch):
-    import graphdb_td2_spark.graph.queries as q
+def test_concurrent_first_requests_build_once(spark, tmp_path, monkeypatch):
+    """Eight threads asking for a view nobody has built run ONE build and
+    all get the same persisted DataFrame (ThreadingHTTPServer's first
+    concurrent /recs requests)."""
+    import graphdb_td2_spark.recs.queries as rq
 
-    dead_g = type("G", (), {"vertices": None})()
+    calls = []
 
-    class _DeadFrame:
-        @property
-        def sparkSession(self):
-            raise RuntimeError("stopped")
+    def slow_read_table(spark_, sf_dir_, name, columns=None):
+        calls.append(name)
+        time.sleep(0.2)
+        return spark_.createDataFrame([(1, 2)], "l_orderkey long, l_partkey long")
 
-    dead_g.vertices = _DeadFrame()
-    monkeypatch.setitem(q._GRAPH_CACHE, ("dead-app", "x"), dead_g)
-    q.cached_graph(spark, sf_dir)
-    assert ("dead-app", "x") not in q._GRAPH_CACHE
+    monkeypatch.setattr(rq, "read_table", slow_read_table)
+    sf = str(tmp_path / "unbuilt")
+    start = threading.Barrier(8)
+    results = [None] * 8
+
+    def worker(i):
+        start.wait(timeout=30)
+        results[i] = rq._items(spark, sf)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert calls == ["lineitem"]
+    assert results[0] is not None
+    assert all(r is results[0] for r in results)
 
 
 def test_trained_centroids_key_on_actual_corpus(spark):

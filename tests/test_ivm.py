@@ -503,7 +503,8 @@ def test_steady_batch_jobs_per_batch_ceiling(spark, tmp_path):
     materializations + the one unified segment write). A regression here
     (extra actions, AQE re-enabled inside the run, a state rewrite
     sneaking back in) shows up as job count, which is load-independent —
-    see tools/ivm_batch_profile.py for the full wall-clock table."""
+    see tools/ivm_batch_profile.py in git history for the full
+    wall-clock table."""
     from graphdb_td2_spark.streaming.ivm import (
         N_BUCKETS,
         apply_cooccurrence_delta,

@@ -19,7 +19,15 @@ import sys
 import textwrap
 from pathlib import Path
 
+from graphdb_td2_spark import caching
+
 REPO = str(Path(__file__).resolve().parent.parent)
+
+
+def _memoized_lake_name(spark, sf_dir: str, what: str) -> str:
+    """The table name this session's memo recorded for a lake artifact."""
+    key = (spark.sparkContext.applicationId, ("lake", sf_dir.rstrip("/"), what))
+    return caching._STORE[key].value
 
 
 def _run_subprocess(code: str) -> str:
@@ -76,18 +84,17 @@ def test_second_process_reuses_published_lake(tmp_path):
     assert rows1 == rows2  # served answers identical across processes
 
 
-def test_reuse_registration_launches_no_jobs(spark, sf_dir, tmp_path):
+def test_reuse_registration_launches_no_jobs(spark, sf_dir, tmp_path, monkeypatch):
     """Fingerprint-match registration is catalog-only: DDL over the
     published location, explicit schema from the manifest — no listing
     job, no scan job."""
     from graphdb_td2_spark import lake
 
-    # the session fixture's warehouse is fine — clear the session cache so
+    # the session fixture's warehouse is fine — clear the session memo so
     # the second _ensure takes the cold (cross-process-equivalent) path
     lake.items_bucketed(spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir.rstrip("/"), "items")
-    name = lake._LAKE_CACHE.pop(key)
+    name = _memoized_lake_name(spark, sf_dir, "items")
+    monkeypatch.setattr(caching, "_STORE", {})
     spark.sql(f"DROP TABLE IF EXISTS {name}")  # simulate a fresh catalog
 
     tracker = spark.sparkContext.statusTracker()
@@ -98,10 +105,11 @@ def test_reuse_registration_launches_no_jobs(spark, sf_dir, tmp_path):
     finally:
         spark.sparkContext.setJobGroup(None, None)
     assert list(jobs) == []
-    assert lake._LAKE_CACHE[key] == name  # same published table, reused
+    # same published table, reused
+    assert _memoized_lake_name(spark, sf_dir, "items") == name
 
 
-def test_mutated_corpus_triggers_rebuild(spark, tmp_path):
+def test_mutated_corpus_triggers_rebuild(spark, tmp_path, monkeypatch):
     """Staleness: rewriting a corpus file changes the fingerprint; the
     next cold ensure rebuilds and the served rows reflect the NEW corpus."""
     from pyspark.sql import functions as F
@@ -115,8 +123,7 @@ def test_mutated_corpus_triggers_rebuild(spark, tmp_path):
     sf = str(corpus)
 
     n0 = lake.items_bucketed(spark, sf).count()
-    key = (spark.sparkContext.applicationId, sf, "items")
-    name = lake._LAKE_CACHE[key]
+    name = _memoized_lake_name(spark, sf, "items")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     manifest_before = json.load(open(f"{wh}/{name}/{lake.MANIFEST_NAME}"))
 
@@ -128,7 +135,8 @@ def test_mutated_corpus_triggers_rebuild(spark, tmp_path):
 
     pq.write_table(pa.Table.from_pandas(pdf), str(corpus / "lineitem.parquet"))
 
-    lake._LAKE_CACHE.pop(key)  # cold path, as a fresh process would take
+    # cold path, as a fresh process would take
+    monkeypatch.setattr(caching, "_STORE", {})
     rebuilt = lake.items_bucketed(spark, sf)
     n1 = rebuilt.count()
     manifest_after = json.load(open(f"{wh}/{name}/{lake.MANIFEST_NAME}"))
@@ -139,7 +147,7 @@ def test_mutated_corpus_triggers_rebuild(spark, tmp_path):
     assert all(o % 2 == 0 for o in got)
 
 
-def test_mtime_preserving_rewrite_still_triggers_rebuild(spark, tmp_path):
+def test_mtime_preserving_rewrite_still_triggers_rebuild(spark, tmp_path, monkeypatch):
     """VERDICT r8 task 5: a rewrite that preserves BOTH size-irrelevant
     mtime and path (rsync -t / object-store restore shape) must still
     flip the fingerprint — the content probe sees the new bytes."""
@@ -155,8 +163,7 @@ def test_mtime_preserving_rewrite_still_triggers_rebuild(spark, tmp_path):
     sf = str(corpus)
 
     n0 = lake.items_bucketed(spark, sf).count()
-    key = (spark.sparkContext.applicationId, sf, "items")
-    name = lake._LAKE_CACHE[key]
+    name = _memoized_lake_name(spark, sf, "items")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     manifest_before = json.load(open(f"{wh}/{name}/{lake.MANIFEST_NAME}"))
     stat_before = os.stat(target)
@@ -171,7 +178,8 @@ def test_mtime_preserving_rewrite_still_triggers_rebuild(spark, tmp_path):
     os.utime(target, ns=(stat_before.st_atime_ns, stat_before.st_mtime_ns))
     assert os.stat(target).st_mtime_ns == stat_before.st_mtime_ns
 
-    lake._LAKE_CACHE.pop(key)  # cold path, as a fresh process would take
+    # cold path, as a fresh process would take
+    monkeypatch.setattr(caching, "_STORE", {})
     rebuilt = lake.items_bucketed(spark, sf)
     manifest_after = json.load(open(f"{wh}/{name}/{lake.MANIFEST_NAME}"))
     assert manifest_after["fingerprint"] != manifest_before["fingerprint"]

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from graphdb_td2_spark import lake
+from graphdb_td2_spark import caching, lake
 from graphdb_td2_spark.graph.hyperball import (
     _BROADCAST_STATE_MAX,
     _REG_COLS,
@@ -28,7 +28,7 @@ def test_stats_match_direct_counts_and_sidecar_roundtrips(
 
     # a fresh process (memo cleared) must read the sidecar, not recompute:
     # poison the compute path and ask again
-    monkeypatch.setattr(lake, "_STATS_CACHE", {})
+    monkeypatch.setattr(caching, "_STORE", {})
 
     def boom(*a, **k):  # pragma: no cover - must not run
         raise AssertionError("stats sidecar missed — adjacency recomputed")

@@ -17,7 +17,7 @@ table carries a ``_lake_manifest.json`` (underscore-prefixed → invisible
 to parquet scans) recording a CONTENT FINGERPRINT of the corpus inputs it
 was derived from — per source file (path, length, modification time,
 and an md5 CONTENT PROBE of the first+last 64 KiB) plus the build
-parameters (bucket/sort spec, bucket count, artifact version).
+parameters (bucket/sort spec, artifact version).
 A new process recomputes the fingerprint (one filesystem listing, no data
 read) and, on match, re-registers the existing files as an EXTERNAL
 bucketed table — zero build jobs. Any mismatch (corpus regenerated,
@@ -26,6 +26,16 @@ is the reference's own architecture: ``app/etl.py`` builds the Neo4j
 adjacency once and every ``/recs`` request in ``app/main.py`` reads it
 forever — the manifest is what makes "forever" safe without a catalog
 service.
+
+Bucket count: a build writes ``min(N_LAKE_BUCKETS, session shuffle
+width)`` buckets. Each bucket is one task of the write and of every
+bucketed scan, so more buckets than the session's width only queue
+tasks behind its cores. The count is layout, not
+content: it lives in the manifest, which registration reads, and not in
+the fingerprint, so a process at another width reuses the published
+table instead of rebuilding it. A self-join of one bucketed table stays
+exchange-free at any bucket count, since both sides report the same
+bucketing.
 
 Concurrent writers (two Spark applications sharing a warehouse): the
 build lands in a per-application temp directory and PUBLISHES with one
@@ -52,7 +62,7 @@ N_LAKE_BUCKETS = 32
 
 # bump when the build logic changes semantically — invalidates every
 # manifest written under the old version
-_LAKE_FORMAT_VERSION = 3  # v3: content probe joined the fingerprint
+_LAKE_FORMAT_VERSION = 4  # v4: bucket count left the fingerprint
 
 MANIFEST_NAME = "_lake_manifest.json"
 
@@ -131,7 +141,6 @@ def _fingerprint(
     src_tables: list[str],
     bucket_by: list[str],
     sort_by: list[str],
-    n_buckets: int,
 ) -> str:
     payload = json.dumps(
         {
@@ -139,7 +148,6 @@ def _fingerprint(
             "what": what,
             "bucket_by": bucket_by,
             "sort_by": sort_by,
-            "n_buckets": n_buckets,
             "sources": _source_stats(spark, sf_dir, src_tables),
         },
         sort_keys=True,
@@ -187,7 +195,6 @@ def _ensure(
     bucket_by: list[str],
     sort_by: list[str],
     src_tables: list[str],
-    n_buckets: int = N_LAKE_BUCKETS,
 ) -> DataFrame:
     """The published table for ``what``, built or fingerprint-validated
     once per session; the memo records the table name only after one of
@@ -195,9 +202,7 @@ def _ensure(
     name = memo(
         spark,
         ("lake", sf_dir.rstrip("/"), what),
-        lambda: _publish(
-            spark, sf_dir, what, build, bucket_by, sort_by, src_tables, n_buckets
-        ),
+        lambda: _publish(spark, sf_dir, what, build, bucket_by, sort_by, src_tables),
     )
     return spark.table(name)
 
@@ -210,10 +215,9 @@ def _publish(
     bucket_by: list[str],
     sort_by: list[str],
     src_tables: list[str],
-    n_buckets: int,
 ) -> str:
     name = _table_name(sf_dir, what)
-    fp = _fingerprint(spark, sf_dir, what, src_tables, bucket_by, sort_by, n_buckets)
+    fp = _fingerprint(spark, sf_dir, what, src_tables, bucket_by, sort_by)
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     loc = f"{warehouse}/{name}"
     fs, loc_path, jvm = _hadoop(spark, loc)
@@ -241,6 +245,9 @@ def _publish(
         fs.delete(tmp_path, True)
     spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
     df = build()
+    n_buckets = min(
+        N_LAKE_BUCKETS, int(spark.conf.get("spark.sql.shuffle.partitions"))
+    )
     # one task per bucket -> one file per bucket: the scan can then
     # satisfy both the join's distribution AND its sort requirement
     (
@@ -363,7 +370,7 @@ def copurchase_stats(spark: SparkSession, sf_dir: str) -> dict:
     a cold read outside a built lake pays the one count job and then
     publishes the sidecar for every later process."""
     sf = sf_dir.rstrip("/")
-    fp = _fingerprint(spark, sf, "copurchase_stats", ["lineitem"], [], [], 0)
+    fp = _fingerprint(spark, sf, "copurchase_stats", ["lineitem"], [], [])
     return memo(
         spark, ("lake_stats", sf, fp), lambda: _read_or_count_stats(spark, sf, fp)
     )

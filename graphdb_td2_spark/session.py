@@ -62,6 +62,16 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def session_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory inside the driver's Spark temp dir, which Spark
+    deletes when the context stops — for state that lives exactly as long
+    as the session."""
+    import tempfile
+
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply this engine's runtime-settable confs to a session we didn't build.
 

@@ -161,13 +161,12 @@ def streaming_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documents streamed in multi-file micro-batches) and return it. The
     oracle is the plain batch LSH SQL without the bucket cap — IVM-style
     correctness: indistinguishable from a recompute."""
-    import tempfile
-
     from ..io import read_table
+    from ..session import session_dir
 
     def build():
         docs = read_table(spark, sf_dir, "documents")
-        root = tempfile.mkdtemp(prefix="spark_mh_stream_")
+        root = session_dir(spark, "spark_mh_stream_")
         stream_dir = f"{root}/stream"
         docs.repartition(4).write.parquet(stream_dir)
         state_dir = f"{root}/state"

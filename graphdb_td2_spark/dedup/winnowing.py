@@ -74,7 +74,7 @@ def winnowed_fp_rows(
     (O(tokens·w) hashes per doc, the 221.6 s sf0.1 wall). Two projects
     survive optimization because CollapseProject refuses to inline a
     non-cheap alias referenced more than once — each shingle is hashed
-    exactly once (measured A/B in PERF_NOTES_r10)."""
+    exactly once (measured A/B in the round-10 perf notes, in git history)."""
     hashed = docs.select(key, _shingle_hashes(F.col("text")).alias("hashes"))
     nh = F.size(F.col("hashes"))
     selected = F.when(

@@ -69,24 +69,3 @@ def cosine_similarity_q(a: Column, b: Column) -> Column:
     return dot_q(a, b).cast("double") / (
         F.sqrt(sqnorm_q(a).cast("double")) * F.sqrt(sqnorm_q(b).cast("double"))
     )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Float-native cosine (production variant; summation-order sensitive,
-    not oracle-gated)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n1 = F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n2 = F.aggregate(
-        F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return dot / (F.sqrt(n1) * F.sqrt(n2))

@@ -1,32 +1,27 @@
 """Breadth-first distance levels from a seed vertex [extension to §2.L] —
-the ``shortestPath`` surface a Cypher user expects, as iterative
-min-distance relaxation (undirected, unit edge weights).
+the ``shortestPath`` surface a Cypher user expects: weighted SSSP
+(``graph/sssp.py``) over unit edge weights, undirected.
 
 Fixed round count (``MAX_HOPS``) instead of convergence detection: both
 engines then evaluate the identical recurrence the identical number of
 times, so the DuckDB twin (chained CTEs in ``__spark_entry__.py``)
 matches exactly even on a graph whose diameter exceeds the cap — rows
 past the cap simply stay unreached, in both engines.
-
-Same iterative-loop discipline as pagerank/components: one shuffle per
-round, ``localCheckpoint`` every round (the distance frame enters the
-next plan twice — without truncation Catalyst re-analysis goes
-exponential; see ``graph/pagerank.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpointing import (
-    resolve_broadcast_state,
-    state_partitions,
-    truncate_lineage,
-)
-
-from .queries import cached_graph
+from .queries import cached_graph, cached_und_edges, property_graph_parts
+from .sssp import sssp_distances
 
 MAX_HOPS = 6
+
+
+def _unit(edges: DataFrame) -> DataFrame:
+    # a projection: a loop-shaped adjacency keeps its partitioning
+    return edges.select("src", "dst", F.lit(1).alias("w"))
 
 
 def bfs_distances(
@@ -35,77 +30,12 @@ def bfs_distances(
     seed: str,
     max_hops: int = MAX_HOPS,
     n_vertices: int | None = None,
-    und: DataFrame | None = None,
 ) -> DataFrame:
     """``(id, distance)`` with distance NULL when the vertex is not
-    reachable within ``max_hops`` undirected hops of ``seed``. ``und``:
-    caller-owned prebuilt undirected relation (the session lake artifact,
-    ``graph.queries.cached_und_edges``); derived call-scoped otherwise."""
-    owns_und = und is None
-    if owns_und:
-        und = (
-            edges.select("src", "dst")
-            .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .distinct()
-        )
-    # Partition budget (same rationale as pagerank._iterate_fp): iteration
-    # state is vertex-sized; a dimension-sized graph should not shuffle at
-    # the session's full partition count every round.
-    small = resolve_broadcast_state(None, n_vertices)
-    if small:
-        parts = state_partitions(n_vertices, und)
-        if owns_und:
-            und = und.repartition(parts, "src")
-        vertices = vertices.repartition(parts)
-    if owns_und:
-        und = und.persist()
-    dist = vertices.select(
-        "id",
-        F.when(F.col("id") == seed, F.lit(0)).cast("long").alias("distance"),
-    ).transform(truncate_lineage)
-    # Frontier BFS: only vertices settled in the PREVIOUS round emit
-    # messages (unit edge weights → a settled distance never improves), so
-    # round k shuffles the frontier's edges, not all settled vertices' —
-    # identical fixpoint, a fraction of the join volume on later rounds.
-    frontier = dist.filter(F.col("distance").isNotNull()).transform(truncate_lineage)
-    # Exchange-free merge (the sssp_distances shape, r12): min-combined
-    # messages out of the frontier are the ONE per-round shuffle; the merge
-    # broadcasts them into a left join against the checkpointed distance
-    # vector — least() skips NULLs, so least(msg, old) IS
-    # min-with-unreached-as-infinity. The old union+groupBy formulation
-    # re-aggregated the full |V|-row vector every hop. ONE driver action
-    # per round (the hits_fp discipline): only the new distance vector
-    # checkpoints eagerly; the frontier checkpoints LAZILY and materializes
-    # inside the NEXT round's action, which still reads this round's
-    # persisted merged frame — released one round late.
-    bc = F.broadcast if small else (lambda df: df)
-    prev_merged: list = []
-    for _ in range(max_hops):
-        msgs = (
-            und.join(bc(frontier), und.src == F.col("id"))
-            .select(F.col("dst").alias("id"), (F.col("distance") + 1).alias("msg"))
-            .groupBy("id")
-            .agg(F.min("msg").alias("msg"))
-        )
-        merged = dist.join(bc(msgs), "id", "left").persist()
-        relaxed = merged.select(
-            "id", F.least("msg", "distance").alias("distance")
-        ).transform(truncate_lineage)
-        if prev_merged:
-            prev_merged.pop().unpersist()
-        # unit weights: a vertex enters the frontier iff it was previously
-        # unreached (a settled distance never improves)
-        frontier = (
-            merged.filter(F.col("distance").isNull() & F.col("msg").isNotNull())
-            .select("id", F.col("msg").alias("distance"))
-        ).transform(truncate_lineage, eager=False)
-        prev_merged.append(merged)
-        dist = relaxed
-    if prev_merged:
-        prev_merged.pop().unpersist()
-    if owns_und:
-        und.unpersist()
-    return dist
+    reachable within ``max_hops`` undirected hops of ``seed``."""
+    return sssp_distances(
+        vertices, _unit(edges), seed, max_hops, n_vertices=n_vertices
+    )
 
 
 def bfs_level_sizes(
@@ -113,16 +43,14 @@ def bfs_level_sizes(
 ) -> DataFrame:
     """Level-size histogram of the BFS from one customer seed:
     ``(distance, n_vertices)`` for every reached level, ordered."""
-    from .queries import cached_und_edges
-
     g = cached_graph(spark, sf_dir)
-    dist = bfs_distances(
+    dist = sssp_distances(
         g.vertices,
-        g.edges,
+        _unit(g.edges),
         seed,
         max_hops,
-        n_vertices=g.vertices.count(),
-        und=cached_und_edges(spark, sf_dir),
+        und=_unit(cached_und_edges(spark, sf_dir)),
+        n_parts=property_graph_parts(spark, sf_dir),
     )
     return (
         dist.filter(F.col("distance").isNotNull())

@@ -4,45 +4,18 @@ min-label propagation, the companion to ``pagerank.py`` on the L3
 
 Algorithm: every vertex starts labeled with its own id; each round a
 vertex takes the minimum label among itself and its neighbors (edges
-treated as undirected). Converges in O(component diameter) rounds —
-checked each round, with a hard cap. ``pointer_jump=True`` adds a
-label-doubling step per round (new_label(v) := new_label(new_label(v)),
-well-defined because labels are vertex ids), which cuts the round bound
-to O(log diameter) — the acceleration the pathological path-graph needs.
-Both schedules reach the same fixpoint (the component-minimum id), so
-the oracle twin matches either way.
+treated as undirected) — a min-combine superstep loop
+(``graph/superstep.py``) that halts at the first round that changes no
+label, O(component diameter) rounds. The fixpoint is the
+component-minimum id; a run that hits ``max_iter`` first raises rather
+than return labels short of it.
 
-Frontier-delta messages (r13, the ``bfs.py``/``sssp.py`` discipline):
-only vertices whose label CHANGED last round emit messages — an
-unchanged vertex's label already reached every neighbor in the round it
-last changed, and the min-merge is monotone, so dropping repeat sends is
+Only vertices whose label changed last round send: an unchanged
+vertex's label already reached every neighbor in the round it last
+changed, and the min-merge is monotone, so dropping repeat sends is
 exactly equivalent to full propagation (the oracle, which unrolls FULL
-rounds, hash-matches — the executable proof). Round 1 sends from
-everyone; on dense corpora the frontier collapses within 2-3 rounds and
-tail rounds cost frontier-scale, not |V|-scale.
-
-Physical shape (r13 optimization round, guide §2.4 "remove shuffles
-outright"): the loop runs CO-PARTITIONED with NO broadcasts on either
-path — state (labels/frontier) and the undirected adjacency are both
-hash-partitioned into ``state_partitions(|V|)`` (edges by ``src``, state
-by ``id``) under ``static_planning`` (AQE off inside the loop), so the
-per-round checkpoints preserve ``outputPartitioning`` and every join
-plans as an exchange-free ``ShuffledHashJoin``; the only per-round
-exchange is the message combine (``repartition(nparts, id)`` feeding the
-MIN aggregate). This replaced the r12 broadcast-state fast path: the
-broadcast variant collected the |V|-sized frontier to the driver and
-re-shipped it every round (2 broadcast builds/round — measured SLOWER at
-sf0.1, 9.7 vs 4.1 s, and a hard 8 GB death at 100 TB scale), while the
-co-partitioned shape is identical at every scale, so the vertex-count
-gate became unnecessary here. MIN over ids is order-free, so the labels
-are identical under any physical plan.
-
-Iterative-loop discipline (same as pagerank): the merged frame's lineage
-is truncated EVERY round. The labels enter the next round's plan through
-both the join and the union leg, so without truncation the plan doubles
-per round and Catalyst re-analysis goes exponential. The truncation mode
-is session-configurable (``graph/checkpointing.py``): executor-local by
-default, reliable FS-backed ``checkpoint()`` for durable cluster runs.
+rounds, hash-matches — the executable proof). MIN over ids is
+order-free, so the labels do not depend on the physical plan.
 
 Not SQL-expressible in one query → the driver records the weaker
 rows-only check (like pagerank/ppr); semantics are unit-tested on
@@ -53,13 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpointing import graph_partitions, static_planning, truncate_lineage
-
 from .queries import cached_graph
+from .superstep import min_send, run_supersteps, symmetric_edges
 
 # Safety valve only — propagation stops at the first unchanged round (the
-# corpus graph converges in <10; with pointer_jump the bound is
-# logarithmic in the diameter instead of linear).
+# corpus graph converges in <10).
 DEFAULT_MAX_ITER = 50
 
 
@@ -69,120 +40,34 @@ def connected_components(
     max_iter: int = DEFAULT_MAX_ITER,
     und: DataFrame | None = None,
     n_vertices: int | None = None,
-    pointer_jump: bool = False,
     n_parts: int | None = None,
 ) -> DataFrame:
     """``(id, component)`` — component = min vertex id reachable (any total
     order over ids works; string ids use their lexicographic order).
 
-    ``und``: a caller-owned prebuilt undirected relation already in loop
-    shape — hash-partitioned by ``src`` into ``n_parts`` (the
-    ``graph.queries.cached_und_edges`` session artifact; pass its budget,
-    ``queries.property_graph_parts``, as ``n_parts`` so the loop state
-    co-partitions with it). When absent the loop derives and shapes a
-    call-scoped copy, sizing the budget from |V| and |E| (one count job
-    each when ``n_vertices``/``n_parts`` are not supplied)."""
-    spark = vertices.sparkSession
-    owns_und = und is None
-    und0 = None
-    if owns_und:
-        # Ad-hoc graph (e.g. the dedup pair pipeline): persist the
-        # derived relation BEFORE any count so the caller's lazy edge
-        # pipeline executes exactly once — the budget then derives from
-        # the persisted frame's row count (an upper bound on |V| too:
-        # every non-isolated vertex appears as a src).
-        e = edges.select("src", "dst")
-        und0 = (
-            e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .distinct()
-            .persist()
+    ``und``: a caller-owned undirected relation in loop shape (the
+    ``graph.queries.cached_und_edges`` session artifact), passed with its
+    budget ``n_parts`` (``queries.property_graph_parts``); derived
+    call-scoped from ``edges`` when absent. Raises ``RuntimeError`` when
+    ``max_iter`` rounds end before a round that changes no label."""
+    if und is None:
+        und, n_parts = symmetric_edges(edges), None
+    labels, halted = run_supersteps(
+        vertices.select("id", F.col("id").alias("component")),
+        und,
+        min_send(F.col("component")),
+        # least() skips NULLs: isolated vertices (msg NULL) keep their label
+        merge=[F.least("msg", "component").alias("component")],
+        changed=F.col("msg") < F.col("component"),
+        max_rounds=max_iter,
+        n_parts=n_parts,
+        n_vertices=n_vertices,
+    )
+    if not halted:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter}"
+            " rounds"
         )
-        n_und = und0.count()
-        if n_vertices is None:
-            n_vertices = n_und
-        if n_parts is None:
-            n_parts = graph_partitions(n_vertices, n_und, vertices)
-    elif n_parts is None:
-        if n_vertices is None:
-            n_vertices = vertices.count()
-        n_parts = graph_partitions(n_vertices, 2 * edges.count(), vertices)
-    nparts = n_parts
-    with static_planning(spark, shuffle_partitions=nparts):
-        if owns_und:
-            und = und0.repartition(nparts, "src").persist()
-        labels = truncate_lineage(
-            vertices.select("id", F.col("id").alias("component")).repartition(
-                nparts, "id"
-            )
-        )
-        frontier = labels
-        # Per round: ONE eager checkpoint of the merged frame (the round's
-        # only substantial job — everything upstream is exchange-free but
-        # the message combine), then a cheap convergence probe over the
-        # checkpointed blocks. labels/frontier re-derive lazily from the
-        # checkpoint (select/filter over a LogicalRDD that KEEPS the id
-        # partitioning), so the next round's joins stay co-partitioned and
-        # the plan depth is O(1). Superseded rounds' blocks are released
-        # by the ContextCleaner when their frames go out of scope.
-        for _ in range(max_iter):
-            # groupBy exchanges straight into the pinned loop width with
-            # map-side partial MIN intact (no repartition — see
-            # static_planning)
-            msgs = (
-                und.join(frontier.hint("shuffle_hash"), und.src == frontier.id)
-                .select(F.col("dst").alias("id"), "component")
-                .groupBy("id")
-                .agg(F.min("component").alias("msg"))
-            )
-            merged = labels.join(msgs.hint("shuffle_hash"), "id", "left")
-            if pointer_jump:
-                # label-doubling: after the propagate step, chase the new
-                # label one hop through the label table itself. Labels are
-                # vertex ids, so the lookup side is the propagated table
-                # keyed by id; an unmatched or larger target keeps the
-                # propagated label (labels only ever decrease). The jump
-                # join is keyed on the LABEL (comp1), so it costs two
-                # extra exchanges plus the restore of the id partitioning
-                # — worth it only when diameter >> rounds (the path-graph
-                # case); the corpus graphs converge faster without it.
-                step = merged.select(
-                    "id",
-                    # least() skips NULLs: isolated vertices keep their label
-                    F.least("msg", "component").alias("comp1"),
-                    F.col("component").alias("old_comp"),
-                )
-                lookup = step.select(
-                    F.col("id").alias("jid"), F.col("comp1").alias("jcomp")
-                )
-                merged = (
-                    step.join(
-                        lookup.hint("shuffle_hash"),
-                        step.comp1 == lookup.jid,
-                        "left",
-                    )
-                    .select(
-                        "id",
-                        F.least(
-                            F.coalesce("jcomp", "comp1"), F.col("comp1")
-                        ).alias("msg"),
-                        F.col("old_comp").alias("component"),
-                    )
-                    .repartition(nparts, "id")
-                )
-            merged = truncate_lineage(merged)
-            # least() skips NULLs: isolated vertices (msg NULL) keep their label
-            labels = merged.select(
-                "id", F.least("msg", "component").alias("component")
-            )
-            improved = merged.filter(F.col("msg") < F.col("component"))
-            frontier = improved.select("id", F.col("msg").alias("component"))
-            if improved.limit(1).count() == 0:
-                break
-    if owns_und:
-        # the final labels are a select over the last round's CHECKPOINT —
-        # independent of the call-scoped adjacency caches
-        und.unpersist()
-        und0.unpersist()
     return labels
 
 

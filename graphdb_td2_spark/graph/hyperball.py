@@ -34,7 +34,8 @@ Scale notes: state is ONE wide row per vertex (16 register columns;
 LONG on the big-graph shuffle path — a SMALLINT variant measured 49%
 SLOWER at sf10, the 16-way MAX re-widens every comparison — but
 SMALLINT on the sub-bar broadcast path where the narrow rows shrank
-the per-round broadcast 26% wall at sf0.1; see SCALE_r9_graph.json) —
+the per-round broadcast 26% wall at sf0.1; round-9 scale report in
+git history) —
 each round is one equi-join of the cached
 symmetric adjacency against the state (|E| wide rows, not 16·|E|
 exploded ones) plus a per-node 16-way columnar MAX aggregate whose
@@ -72,8 +73,8 @@ EST_NUM = ALPHA_NUM * M_REG * M_REG * EST_SCALE * (2 ** RHO_W)
 # Vertex count below which the round join broadcasts the register state
 # instead of shuffling the edge relation. MEASURED crossover, not the
 # pagerank bar: at 20k vertices the broadcast round join wins 25.4 s vs
-# 36.0 s, but at 2M vertices it LOSES 676 s vs 425 s (SCALE_r9_graph.json
-# ab_variants) — unlike the static rank vectors, the register state is
+# 36.0 s, but at 2M vertices it LOSES 676 s vs 425 s (the round-9 graph
+# scale report's A/B variants, in git history) — unlike the static rank vectors, the register state is
 # re-collected and re-broadcast EVERY round, so the per-round rebuild
 # (~40 B/vertex collect + per-task hashmap) swamps the saved exchange
 # once the state stops being trivially small. 100k × ~40 B ≈ 4 MB keeps
@@ -165,7 +166,7 @@ def _round_ready_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase adjacency cached for the R round scans (the
     session lake artifact, ``walks.cached_copurchase_adjacency``).
 
-    Measured A/B at sf10 (PERF_NOTES_r9 §3): pre-partitioning+sorting the
+    Measured A/B at sf10 (round-9 perf notes §3, in git history): pre-partitioning+sorting the
     cache on ``dst`` to elide the per-round join exchange won 1.4× at
     sf0.1 but LOST 1.3× at sf10 — the 370M-row sorted cache build costs
     more than the four exchanges it saves once the relation no longer
@@ -233,7 +234,7 @@ def _hyperball_rounds(
         # join against the state producing GREATEST registers and the
         # changed flag together" variant was A/B'd and LOST at both
         # scales (sf0.1 34.8 s vs 25.4 s, sf10 528.5 s vs 444.8 s,
-        # SCALE_r9_graph.json) — the extra state⋈maxes exchange costs
+        # round-9 scale report in git history) — the extra state⋈maxes exchange costs
         # more than the checkpoint it saves; one wide map-side-combined
         # aggregate stays the cheapest way to merge sketches.
         # Lazy checkpoints (the hits_fp one-action-per-round discipline):

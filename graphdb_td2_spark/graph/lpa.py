@@ -13,11 +13,11 @@ edge flips labels forever); the self-vote damps the oscillation and the
 function of the graph — which is what lets a DuckDB oracle reproduce it
 exactly (unrolled one-CTE-per-round, same round count).
 
-Scale notes: each round is one shuffle-join (undirected edges × labels,
-both keyed by vertex) + one (vertex, label) partial-aggregated count + a
-per-vertex top-1 window — the same per-round cost envelope as PageRank;
-lineage is truncated every round (``graph/checkpointing.py``) so plan
-analysis stays O(1) per round.
+Each round is one superstep (``graph/superstep.py``): every vertex
+sends its label (a co-partitioned edge join), the (vertex, label) vote
+count is partially aggregated, and a per-vertex top-1 window picks the
+winner. A round that changes no label ends the run early with the same
+labels the remaining rounds would produce.
 """
 
 from __future__ import annotations
@@ -25,8 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..caching import memo
-from .checkpointing import resolve_broadcast_state, truncate_lineage
-from .queries import cached_graph, cached_und_edges, cached_vertex_count
+from .queries import (
+    cached_graph,
+    cached_und_edges,
+    cached_vertex_count,
+    property_graph_parts,
+)
+from .superstep import run_supersteps, symmetric_edges
 
 DEFAULT_ROUNDS = 4  # fixed — both engines run exactly this many
 
@@ -42,9 +47,26 @@ def _cached_labels(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
             rounds=rounds,
             und=cached_und_edges(spark, sf_dir),
             n_vertices=cached_vertex_count(spark, sf_dir),
+            n_parts=property_graph_parts(spark, sf_dir),
         ).persist()
 
     return memo(spark, ("labels", sf_dir.rstrip("/"), rounds), build)
+
+
+def _send(und: DataFrame, state: DataFrame, frontier: DataFrame) -> DataFrame:
+    top1 = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
+    votes = (
+        und.join(state.hint("shuffle_hash"), und.src == state.id)
+        .select(F.col("dst").alias("id"), "lbl")
+        .unionByName(state)  # self-vote
+    )
+    return (
+        votes.groupBy("id", "lbl")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .withColumn("rn", F.row_number().over(top1))
+        .filter(F.col("rn") == 1)
+        .select("id", F.col("lbl").alias("new_lbl"))
+    )
 
 
 def label_propagation(
@@ -53,61 +75,27 @@ def label_propagation(
     rounds: int = DEFAULT_ROUNDS,
     und: DataFrame | None = None,
     n_vertices: int | None = None,
-    broadcast_state: bool | None = None,
+    n_parts: int | None = None,
 ) -> DataFrame:
     """``(id, lbl)`` after ``rounds`` synchronous LPA rounds (undirected
     edges; most frequent label among neighbors + self, ties to the
     minimum label).
 
-    ``broadcast_state``: tri-state, resolved by the tier-wide rule
-    (``checkpointing.resolve_broadcast_state``) — the label vector and
-    per-vertex winners are |V|-sized, so the broadcast hints are gated on
-    a supplied vertex count exactly like components/sssp (VERDICT r12
-    finding #1: this module used to hard-code ``F.broadcast``). The vote
-    count and top-1 window are identical on both paths (exact integer
-    counts, deterministic tie-break), so the labels don't depend on the
-    dispatch."""
-    owns_und = und is None
-    if owns_und:
-        und = (
-            edges.select("src", "dst")
-            .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .distinct()
-            .persist()
-        )
-    labels = vertices.select("id", F.col("id").alias("lbl")).transform(
-        truncate_lineage
+    ``und``: a caller-owned loop-shaped undirected relation
+    (``graph.queries.cached_und_edges``) passed with its budget
+    ``n_parts``; derived call-scoped from ``edges`` when absent."""
+    if und is None:
+        und, n_parts = symmetric_edges(edges), None
+    labels, _ = run_supersteps(
+        vertices.select("id", F.col("id").alias("lbl")),
+        und,
+        _send,
+        merge=[F.coalesce("new_lbl", "lbl").alias("lbl")],
+        changed=F.col("new_lbl") != F.col("lbl"),
+        max_rounds=rounds,
+        n_parts=n_parts,
+        n_vertices=n_vertices,
     )
-    top1 = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
-    # Broadcast-state discipline (the sssp/components shape, r12): when
-    # the gate resolves small, the vertex-sized label vector broadcasts
-    # into the edge join and the per-vertex winners broadcast into the
-    # merge, so the only per-round exchanges are the vote count and the
-    # top-1 window; above the bar every join co-partitions instead.
-    bc = (
-        F.broadcast
-        if resolve_broadcast_state(broadcast_state, n_vertices)
-        else (lambda df: df)
-    )
-    for _ in range(rounds):
-        votes = (
-            und.join(bc(labels), und.src == labels.id)
-            .select(F.col("dst").alias("id"), "lbl")
-            .unionByName(labels.select("id", "lbl"))  # self-vote
-        )
-        counts = votes.groupBy("id", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        best = (
-            counts.withColumn("rn", F.row_number().over(top1))
-            .filter(F.col("rn") == 1)
-            .select("id", F.col("lbl").alias("new_lbl"))
-        )
-        labels = (
-            labels.join(bc(best), "id", "left")
-            .select("id", F.coalesce("new_lbl", "lbl").alias("lbl"))
-            .transform(truncate_lineage)
-        )
-    if owns_und:
-        und.unpersist()
     return labels
 
 
@@ -146,9 +134,6 @@ def community_modularity(
     looking d_c² folds over the per-community degree aggregate, never
     over pairs.
     """
-    from .queries import cached_und_edges
-
-    g = cached_graph(spark, sf_dir)
     lp = _cached_labels(spark, sf_dir, rounds)
     und = cached_und_edges(spark, sf_dir)
     lbl_src = lp.select(F.col("id").alias("src"), F.col("lbl").alias("l_src"))
@@ -165,7 +150,7 @@ def community_modularity(
     )
     m = und.agg((F.count(F.lit(1)) / 2).cast("long").alias("m"))
     return (
-        per_comm.crossJoin(F.broadcast(m))
+        per_comm.crossJoin(m)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_communities"),
             F.first("m").cast("long").alias("n_edges"),

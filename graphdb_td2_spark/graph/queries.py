@@ -17,6 +17,7 @@ from .pagerank import (
     personalized_pagerank,
     personalized_pagerank_fp,
 )
+from .superstep import symmetric_edges
 
 # Four inventory queries share one E2-E9 build instead of re-deriving it
 # (the build is ~4 joins + unions — the dominant cost of every graph
@@ -45,20 +46,16 @@ def cached_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast InMemoryRelation path."""
 
     def build():
-        e = cached_graph(spark, sf_dir).edges.select("src", "dst")
-        und = e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
+        und = symmetric_edges(cached_graph(spark, sf_dir).edges)
         return und.repartition(property_graph_parts(spark, sf_dir), "src").persist()
 
     return memo(spark, ("und_edges", sf_dir.rstrip("/")), build)
 
 
 def cached_vertex_count(spark: SparkSession, sf_dir: str) -> int:
-    """|V| of the property graph per (session, corpus) — the
-    broadcast-state dispatch input for components/LPA/BFS/SSSP entry
-    points: one count job over the persisted vertices on first use, free
-    after (the dispatch must not re-count per call)."""
+    """|V| of the property graph per (session, corpus) — with |E| it
+    sizes the loop budget (``property_graph_parts``): one count job over
+    the persisted vertices on first use, free after."""
     return memo(
         spark,
         ("vertex_count", sf_dir.rstrip("/")),

@@ -1,33 +1,21 @@
 """Weighted single-source shortest paths [extension to §2.L] — the
 Cypher ``shortestPath`` surface generalized to weighted edges (CONTAINS
 carries its order quantity, every other relationship weighs 1; cf.
-``weighted_pagerank_top20``). Bellman-Ford relaxation as iterative
-DataFrame min-aggregation.
+``weighted_pagerank_top20``). Bellman-Ford relaxation as a
+min-combine superstep loop (``graph/superstep.py``); BFS is this loop
+over unit weights.
 
-Fixed round count (``MAX_ROUNDS``) instead of convergence detection, for
-the same reason as :mod:`graphdb_td2_spark.graph.bfs`: both engines run
-the identical recurrence the identical number of times, so the unrolled
-chained-CTE DuckDB twin matches bit-exactly. Distances are exact BIGINTs
+Fixed round count (``MAX_ROUNDS``) instead of convergence detection:
+both engines run the identical recurrence the identical number of
+times, so the unrolled chained-CTE DuckDB twin matches bit-exactly even
+where paths longer than the cap exist. Distances are exact BIGINTs
 (integer weights), so the full value hash is checked, not just rows.
+MIN over BIGINTs is order-free, so distances do not depend on the
+physical plan.
 
-Scale notes: messages are emitted only from the *improved* frontier of
-the previous round (for weighted relaxation a settled vertex can improve
-again, so the frontier is "distance changed", not "newly reached" —
-still a fraction of the vertex set after the first rounds). Physical
-shape (r13): CO-PARTITIONED rounds at every scale — the symmetrized
-min-weight adjacency is hash-partitioned by ``src`` into
-``state_partitions(|V|)`` and checkpointed once per session (the
-``cached_und_edges`` policy), the distance vector is partitioned by
-``id`` and every per-round checkpoint preserves that partitioning under
-``static_planning`` (AQE off inside the loop), so each round plans to
-exactly ONE exchange (the message combine) with zero broadcasts — the
-old sub-5M-vertex broadcast dispatch collected the frontier and the
-message aggregate to the driver every round and measured slower at
-sf0.1. MIN over BIGINTs is order-free, so distances are identical under
-any physical plan. ``localCheckpoint`` per round keeps Catalyst
-re-analysis linear (see graph/pagerank.py); one driver action per round
-(the eager checkpoint of the merged frame — relaxed distances and the
-frontier re-derive lazily from it).
+Messages leave only the vertices whose distance changed last round
+(for weighted relaxation a reached vertex can improve again, so the
+frontier is "distance changed", not "newly reached").
 """
 
 from __future__ import annotations
@@ -35,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..caching import memo
-from .checkpointing import static_planning, truncate_lineage
 from .queries import cached_graph, cached_vertex_count, property_graph_parts
+from .superstep import min_send, run_supersteps
 
 MAX_ROUNDS = 6
 SSSP_TOPK = 20
@@ -59,9 +47,9 @@ def _undirected_min_edges(edges_w: DataFrame) -> DataFrame:
 
 def cached_weighted_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached loop-shaped symmetrized min-weight adjacency of the
-    property graph — partitioned by ``src`` into ``state_partitions(|V|)``
-    with truncated lineage (the ``cached_und_edges`` policy applied to
-    the weighted twin every ``sssp_top20`` call used to re-derive)."""
+    property graph — hash-partitioned by ``src`` into
+    ``property_graph_parts`` and persisted (the ``cached_und_edges``
+    policy for the weighted twin)."""
 
     def build():
         g = cached_graph(spark, sf_dir)
@@ -93,66 +81,28 @@ def sssp_distances(
     """``(id, distance)`` — minimum edge-weight sum over paths of at most
     ``rounds`` undirected hops from ``seed``; NULL when unreached.
 
-    ``und``: caller-owned pre-shaped symmetrized adjacency
-    (``cached_weighted_und_edges``; pass its budget as ``n_parts`` so the
-    state co-partitions with it); derived call-scoped when absent."""
-    from .checkpointing import graph_partitions
+    ``und``: caller-owned loop-shaped symmetrized adjacency
+    (``cached_weighted_und_edges``), passed with its budget ``n_parts``;
+    derived call-scoped from ``edges_w`` when absent."""
+    if und is None:
+        und, n_parts = _undirected_min_edges(edges_w), None
 
-    spark = vertices.sparkSession
-    owns_und = und is None
-    und0 = None
-    if owns_und:
-        # persist BEFORE any count so the caller's lazy edge pipeline
-        # executes exactly once; the budget derives from the persisted
-        # relation's row count (also an upper bound on |V|)
-        und0 = _undirected_min_edges(edges_w).persist()
-        n_und = und0.count()
-        if n_vertices is None:
-            n_vertices = n_und
-        if n_parts is None:
-            n_parts = graph_partitions(n_vertices, n_und, vertices)
-    elif n_parts is None:
-        if n_vertices is None:
-            n_vertices = vertices.count()
-        n_parts = graph_partitions(n_vertices, 2 * edges_w.count(), vertices)
-    parts = n_parts
-    with static_planning(spark, shuffle_partitions=parts):
-        if owns_und:
-            und = und0.repartition(parts, "src").persist()
-        dist = truncate_lineage(
-            vertices.select(
-                "id",
-                F.when(F.col("id") == seed, F.lit(0)).cast("long").alias("distance"),
-            ).repartition(parts, "id")
-        )
-        frontier = dist.filter(F.col("distance").isNotNull())
-        for _ in range(rounds):
-            # min-combined messages out of the frontier (the ONE per-round
-            # exchange), then a co-partitioned merge: least() skips NULLs,
-            # so least(msg, old) IS min-with-unreached-as-infinity —
-            # exactly the relaxation the union+groupBy formulation computed
-            msgs = (
-                und.join(frontier.hint("shuffle_hash"), und.src == F.col("id"))
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("distance") + F.col("w")).alias("msg"),
-                )
-                .groupBy("id")
-                .agg(F.min("msg").alias("msg"))
-            )
-            merged = truncate_lineage(
-                dist.join(msgs.hint("shuffle_hash"), "id", "left")
-            )
-            dist = merged.select("id", F.least("msg", "distance").alias("distance"))
-            frontier = merged.filter(
-                F.col("msg").isNotNull()
-                & (F.col("distance").isNull() | (F.col("msg") < F.col("distance")))
-            ).select("id", F.col("msg").alias("distance"))
-    if owns_und:
-        # final distances derive from the last round's CHECKPOINT —
-        # independent of the call-scoped adjacency caches
-        und.unpersist()
-        und0.unpersist()
+    dist, _ = run_supersteps(
+        vertices.select(
+            "id",
+            F.when(F.col("id") == seed, F.lit(0)).cast("long").alias("distance"),
+        ),
+        und,
+        min_send(F.col("distance") + F.col("w")),
+        # least() skips NULLs: min with unreached as infinity
+        merge=[F.least("msg", "distance").alias("distance")],
+        changed=F.col("msg").isNotNull()
+        & (F.col("distance").isNull() | (F.col("msg") < F.col("distance"))),
+        max_rounds=rounds,
+        active=F.col("distance").isNotNull(),
+        n_parts=n_parts,
+        n_vertices=n_vertices,
+    )
     return dist
 
 

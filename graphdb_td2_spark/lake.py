@@ -366,7 +366,7 @@ def copurchase_stats(spark: SparkSession, sf_dir: str) -> dict:
     tables, so iterative-algorithm dispatch decisions (e.g. HyperBall's
     broadcast-vs-shuffle switch at ``_BROADCAST_STATE_MAX``) read a FREE
     number instead of running a vertex-count probe job (~20 s at sf10,
-    PERF_NOTES_r9 §8). Computed at lake-build time (``build_lake``);
+    round-9 perf notes §8, in git history). Computed at lake-build time (``build_lake``);
     a cold read outside a built lake pays the one count job and then
     publishes the sidecar for every later process."""
     sf = sf_dir.rstrip("/")
@@ -423,54 +423,3 @@ def build_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         what: _table_name(sf_dir, what)
         for what in ("items", _lsh_what(N_HASHES, N_BANDS, BUCKET_CAP))
     }
-
-
-def warm_serving_artifacts(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize every session serving artifact (derived adjacencies,
-    shingle/quantized-corpus caches, trained index constants) — the ETL
-    phase the reference spends its 1800 s budget on, paid up front so
-    serving queries measure serving.
-
-    Sequential by design: overlapping the builds on a 3-worker driver
-    thread pool (guide §2.6) was A/B'd at sf0.1 and measured PARITY
-    (42-48 s either way under comparable host conditions) — each build's
-    shuffle stages already saturate the 32 local cores, so there is no
-    idle tail to back-fill, and two of the builds pin session confs
-    during planning (``cached_fp_graph`` / ``cached_hits_graph`` under
-    ``static_planning``), which a concurrent conf flip could misplan.
-    On a multi-tenant cluster with spare capacity the pool form is the
-    right shape; locally the simple order wins on clarity."""
-    from .dedup.shingles import cached_doc_shingles
-    from .graph.hits import cached_hits_graph
-    from .graph.queries import (
-        cached_edge_count,
-        cached_fp_graph,
-        cached_graph,
-        cached_und_edges,
-        cached_vertex_count,
-    )
-    from .graph.sssp import cached_weighted_und_edges
-    from .graph.walks import cached_copurchase_adjacency
-    from .similarity.ann import (
-        DEFAULT_N_QUERIES,
-        _queries_and_corpus,
-        train_ivf_centroids,
-    )
-    from .similarity.pq import _cached_corpus, train_pq_codebook
-
-    # dependency root: the property graph (everything joins off it) and
-    # its free counts
-    g = cached_graph(spark, sf_dir)
-    cached_vertex_count(spark, sf_dir)
-    cached_edge_count(spark, sf_dir)
-
-    cached_und_edges(spark, sf_dir).count()
-    cached_copurchase_adjacency(spark, sf_dir).count()
-    cached_weighted_und_edges(spark, sf_dir).count()
-    cached_doc_shingles(spark, sf_dir).count()
-    _cached_corpus(spark, sf_dir).count()
-    _, corpus = _queries_and_corpus(spark, sf_dir, DEFAULT_N_QUERIES)
-    train_ivf_centroids(spark, corpus, cache_key=sf_dir)
-    cached_fp_graph(spark, sf_dir).edges_w.count()
-    cached_hits_graph(spark, sf_dir).e_dst.count()
-    train_pq_codebook(spark, _cached_corpus(spark, sf_dir), cache_key=sf_dir)

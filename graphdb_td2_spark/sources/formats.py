@@ -18,8 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from ..schemas import CORPUS
-
 
 def read_csv(
     spark: SparkSession, path: str, schema: T.StructType, header: bool = True
@@ -96,11 +94,6 @@ def write_jdbc(
     for k, v in properties.items():
         writer = writer.option(k, v)
     writer.mode(mode).save()
-
-
-def corpus_schema(name: str) -> T.StructType:
-    """The explicit schema for a corpus table (registry in ``schemas.py``)."""
-    return CORPUS[name]
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -429,6 +429,9 @@ def _mem_advance(
         return
     from pyspark import StorageLevel
 
+    # a union adds the fresh scan's partitions to the old ones: coalesce
+    # to the run width so every scan of the state keeps its task count
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for part, ks in appended.items():
         fresh = _read_buckets(
             spark,
@@ -437,7 +440,11 @@ def _mem_advance(
             part,
         )
         old = cache[part]
-        cache[part] = old.unionByName(fresh).persist(StorageLevel.MEMORY_AND_DISK)
+        cache[part] = (
+            old.unionByName(fresh)
+            .coalesce(width)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
         old.unpersist(False)
     cache["version"] = new_version
     cache["depth"] = cache.get("depth", 0) + 1
@@ -832,20 +839,6 @@ def maintained_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     segs = _mem_state_part(spark, state_dir, version, manifest, "counts", None)
     return segs.groupBy("product_a", "product_b").agg(
         F.sum("n_orders").cast("long").alias("n_orders")
-    )
-
-
-def maintained_items(
-    spark: SparkSession, state_dir: str, order_buckets: list[int] | None = None
-) -> DataFrame:
-    """The maintained CONTAINS relation ``(order_id, product_id)`` —
-    deduped by construction (the delta's anti-join runs before every
-    append). ``order_buckets`` prunes the read to the hash buckets of the
-    orders a serve actually touches."""
-    version = _latest_version(spark, state_dir)
-    manifest = _read_manifest(spark, state_dir, version)
-    return _mem_state_part(
-        spark, state_dir, version, manifest, "items", order_buckets
     )
 
 

@@ -1,12 +1,10 @@
-"""The r13 broadcast-state auto-gate (VERDICT r12 finding #1): every
-iterative graph module must derive its ``F.broadcast`` hints from a
-vertex count, so a >5M-vertex graph NEVER force-broadcasts vertex-scale
-state (Spark's 8 GB broadcast hard limit would kill the job on a real
-100 TB graph). The dispatch is exercised synthetically: a tiny fixture
-with a SUPPLIED above-bar vertex count must build and run the loop
-without a single broadcast hint, while the sub-bar count must hint —
-witnessed by spying on ``pyspark.sql.functions.broadcast`` (the only
-way any of these modules requests a broadcast)."""
+"""The broadcast-state gate: an iterative graph module that hints
+``F.broadcast`` on vertex-scale state derives the hint from a vertex
+count, so a >5M-vertex graph NEVER force-broadcasts (Spark's 8 GB
+broadcast hard limit would kill the job on a real 100 TB graph), and the
+superstep loops (components, LPA) never broadcast at all. Witnessed by
+spying on ``pyspark.sql.functions.broadcast`` (the only way any of these
+modules requests a broadcast)."""
 
 from __future__ import annotations
 
@@ -93,36 +91,34 @@ def test_components_never_hints_broadcast_even_below_bar(spark, broadcast_spy):
     assert broadcast_spy == []
 
 
-def test_components_single_round_plan_is_one_exchange(spark):
-    """Pin the r13 co-partitioned round shape: with the und relation and
-    the label vector both checkpointed pre-partitioned under
-    static_planning, one propagation round plans to ShuffledHashJoins
-    with NO BroadcastExchange and exactly ONE exchange (the message
-    combine's repartition)."""
+def test_components_single_round_plan_is_one_exchange(spark, monkeypatch):
+    """Pin the superstep round shape on the operator's own round: with a
+    loop-shaped adjacency and the id-partitioned state, a components
+    round plans to ShuffledHashJoins with NO BroadcastExchange and
+    exactly ONE exchange (the message combine), its partial MIN below
+    it. The plan is taken inside the run, where the operator checkpoints
+    the round's merged frame."""
+    from graphdb_td2_spark.graph import superstep
     from graphdb_td2_spark.graph.checkpointing import (
         static_planning,
         truncate_lineage,
     )
+    from graphdb_td2_spark.graph.components import connected_components
+    from graphdb_td2_spark.graph.superstep import symmetric_edges
 
     vertices, edges = _two_islands(spark)
     with static_planning(spark, shuffle_partitions=2):
-        e = edges.select("src", "dst")
-        und = truncate_lineage(
-            e.union(e.selectExpr("dst as src", "src as dst"))
-            .distinct()
-            .repartition(2, "src")
-        )
-        labels = truncate_lineage(
-            vertices.selectExpr("id", "id as component").repartition(2, "id")
-        )
-        msgs = (
-            und.join(labels.hint("shuffle_hash"), und.src == labels.id)
-            .select(F.col("dst").alias("id"), "component")
-            .groupBy("id")
-            .agg(F.min("component").alias("msg"))
-        )
-        merged = labels.join(msgs.hint("shuffle_hash"), "id", "left")
-        plan = merged._jdf.queryExecution().executedPlan().toString()
+        und = truncate_lineage(symmetric_edges(edges).repartition(2, "src"))
+    plans: list[str] = []
+    real = superstep.truncate_lineage
+
+    def spy(df, eager=True):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, eager=eager)
+
+    monkeypatch.setattr(superstep, "truncate_lineage", spy)
+    connected_components(vertices, edges, und=und, n_parts=2).collect()
+    plan = plans[1]  # plans[0] is the initial state
     assert "BroadcastExchange" not in plan
     assert "ShuffledHashJoin" in plan
     assert plan.count("Exchange") == 1, plan
@@ -187,41 +183,14 @@ def _path_graph(spark, n):
     return vertices, edges
 
 
-def test_pointer_jump_converges_logarithmically(spark):
-    """A 24-vertex path graph needs 23 plain-propagation rounds; with
-    label-doubling it must converge within 8 — the adversarial
-    high-diameter case VERDICT r12 task 3 names."""
+def test_components_raises_when_max_iter_ends_unconverged(spark):
+    """A 24-vertex path graph needs 23 propagation rounds: at max_iter=8
+    the labels are not at the fixpoint, so the run raises instead of
+    returning them; with the default cap it converges to one component."""
     from graphdb_td2_spark.graph.components import connected_components
 
     vertices, edges = _path_graph(spark, 24)
-    cc = {
-        r.id: r.component
-        for r in connected_components(
-            vertices, edges, max_iter=8, pointer_jump=True
-        ).collect()
-    }
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(vertices, edges, max_iter=8)
+    cc = {r.id: r.component for r in connected_components(vertices, edges).collect()}
     assert set(cc.values()) == {1}
-
-    # plain propagation at the same round budget must NOT have converged —
-    # the witness that the jump is doing the work
-    plain = {
-        r.id: r.component
-        for r in connected_components(
-            vertices, edges, max_iter=8, pointer_jump=False
-        ).collect()
-    }
-    assert set(plain.values()) != {1}
-
-
-def test_pointer_jump_matches_plain_at_convergence(spark):
-    from graphdb_td2_spark.graph.components import connected_components
-
-    vertices, edges = _two_islands(spark)
-    a = sorted(map(tuple, connected_components(vertices, edges).collect()))
-    b = sorted(
-        map(
-            tuple,
-            connected_components(vertices, edges, pointer_jump=True).collect(),
-        )
-    )
-    assert a == b

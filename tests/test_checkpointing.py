@@ -80,3 +80,22 @@ def test_state_partitions_budget(spark):
     assert state_partitions(STATE_ROWS_PER_PARTITION - 1, df) == 1
     assert state_partitions(8 * STATE_ROWS_PER_PARTITION, df) == min(width, 8)
     assert state_partitions(10**9, df) == width
+
+
+def test_static_planning_blocks_exiting_out_of_order_restore_confs(spark):
+    """Two overlapping blocks that exit out of order (enter A, enter B,
+    exit A, exit B) leave AQE and the shuffle width as they were before
+    A: the outermost entry saves them and the last exit restores them."""
+    from graphdb_td2_spark.graph.checkpointing import static_planning
+
+    aqe, width = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    before = (spark.conf.get(aqe), spark.conf.get(width))
+    assert before[0] == "true"
+    a = static_planning(spark, shuffle_partitions=3)
+    b = static_planning(spark, shuffle_partitions=2)
+    a.__enter__()
+    b.__enter__()
+    a.__exit__(None, None, None)
+    assert spark.conf.get(aqe) == "false"  # B is still open
+    b.__exit__(None, None, None)
+    assert (spark.conf.get(aqe), spark.conf.get(width)) == before

@@ -1,8 +1,8 @@
-"""Driver-contract invariants (VERDICT.md round 1, items 1 & 8).
+"""Driver-contract invariants (the round-1 review, items 1 & 8; in git history).
 
 The driver verifies only the first ``DRIVER_QUERY_CAP`` dict entries of
 ``queries()`` against the DuckDB oracle — round 1 proved this empirically
-(CORRECTNESS_r01.json held exactly the first 50 entries in dict order, so
+(its correctness report held exactly the first 50 entries in dict order, so
 the trailing streaming/ANN/multimodal capabilities got no correctness row).
 These tests pin the registry layout so later rounds can't silently push a
 capability past the verification window again.

@@ -700,3 +700,66 @@ def test_ivm_served_brand_fallback_matches_batch_after_each_microbatch(
                 ).collect()
             ]
             assert got == expected, f"batch {bid} cust {cust}: {got} != {expected}"
+
+
+def test_state_cache_scan_keeps_run_width_across_commits(
+    spark, tmp_path, monkeypatch
+):
+    """Each commit advances the in-memory state cache by a union with its
+    fresh segments; the union is coalesced to the run width, so the
+    state scan that opens every commit (its first job) stays at ≤ 8
+    tasks at width 8 instead of growing by 8 per commit."""
+    import os
+    import random
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from graphdb_td2_spark.streaming import ivm
+
+    rng = random.Random(7)
+    t0 = time.time()
+    stream_dir = tmp_path / "stream"
+    stream_dir.mkdir()
+    for b in range(5):
+        rows = [
+            (1000 * b + o, p)
+            for o in range(200)
+            for p in rng.sample(range(60), rng.randint(2, 4))
+        ]
+        arr = list(zip(*rows))
+        f = stream_dir / f"batch-{b}.parquet"
+        pq.write_table(
+            pa.table({"l_orderkey": list(arr[0]), "l_partkey": list(arr[1])}),
+            str(f),
+        )
+        os.utime(f, (t0 + b, t0 + b))
+
+    original = ivm.apply_cooccurrence_delta
+
+    def traced(spark_, batch, bid, state_dir):
+        spark_.sparkContext.setJobGroup(f"ivm-state-scan-{bid}", "commit")
+        original(spark_, batch, bid, state_dir)
+
+    monkeypatch.setattr(ivm, "apply_cooccurrence_delta", traced)
+    # the run width follows the session's, which other tests may change
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        ivm.run_incremental_cooccurrence(
+            spark,
+            str(stream_dir),
+            str(tmp_path / "st"),
+            "l_orderkey long, l_partkey long",
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    tracker = spark.sparkContext.statusTracker()
+    for b in range(1, 5):
+        first = min(tracker.getJobIdsForGroup(f"ivm-state-scan-{b}"))
+        tasks = sum(
+            tracker.getStageInfo(s).numTasks
+            for s in tracker.getJobInfo(first).stageIds
+        )
+        assert tasks <= 8, f"commit {b}: state scan ran {tasks} tasks"

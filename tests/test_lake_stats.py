@@ -48,7 +48,7 @@ def test_dispatch_honors_supplied_vertex_count(
 ):
     """The register dtype is the dispatch witness: the sub-bar path casts
     to SMALLINT, the shuffle path keeps LONG (both measured winners,
-    PERF_NOTES_r9 §8) — so the supplied |V| visibly drives the switch
+    round-9 perf notes §8, in git history) — so the supplied |V| visibly drives the switch
     without running any probe job."""
     adj = copurchase_adjacency(spark, sf_dir)
     _, state, _ = next(_hyperball_rounds(adj, n_vertices=n_vertices))

@@ -1113,7 +1113,7 @@ r{i} AS MATERIALIZED (
   FROM r{p} r LEFT JOIN m{i} m ON r.id = m.id CROSS JOIN d{i} d
 )""")
     if curve:
-        # per-iteration L1 movement — mirrors pagerank.py track_deltas
+        # per-iteration L1 movement — mirrors pagerank.py's l1_delta aggregate
         deltas = "\nUNION ALL\n".join(
             f"""SELECT CAST({i} AS BIGINT) AS iter,
   (SELECT CAST(COALESCE(SUM(ABS(a.rank - b.rank)), 0) AS BIGINT)

@@ -9,8 +9,8 @@ API (see SURVEY.md). This package re-expresses that surface Spark-first:
 - every Cypher pattern query is a Catalyst-optimizable equi-join chain
   (:mod:`graphdb_td2_spark.recs`);
 - iterative graph algorithms (PageRank / Personalized PageRank — the
-  reference's declared TODO, ``app/main.py:31-33``) are DataFrame power
-  iterations (:mod:`graphdb_td2_spark.graph.pagerank`);
+  reference's declared TODO, ``app/main.py:31-33``) are DataFrame
+  supersteps (:mod:`graphdb_td2_spark.graph.superstep`);
 - [extension] large-scale LLM-data-pipeline operators: deduplication,
   similarity search, text analysis, multimodal column plumbing
   (:mod:`graphdb_td2_spark.dedup`, :mod:`graphdb_td2_spark.similarity`,

@@ -14,7 +14,6 @@ from .build import (
     EVENT_TYPE_TO_REL,
 )
 from .hits import hits_fp, hits_top20
-from .pagerank import pagerank, personalized_pagerank
 from .queries import (
     event_edge_dedup_counts,
     graph_edge_counts,
@@ -35,8 +34,6 @@ __all__ = [
     "EVENT_TYPE_TO_REL",
     "hits_fp",
     "hits_top20",
-    "pagerank",
-    "personalized_pagerank",
     "event_edge_dedup_counts",
     "graph_edge_counts",
     "graph_vertex_counts",

@@ -75,7 +75,7 @@ def _per_seed_dependencies(
     """Shared Brandes core: the lazy ``(seed, node, delta_fp)`` relation
     over the ``n_seeds`` lowest-id seeds, plus the list of persisted
     level/delta frames the caller must unpersist after materializing
-    (the hits_fp discipline). Per-seed dependencies are ADDITIVE, so one
+    (bounded live caches). Per-seed dependencies are ADDITIVE, so one
     pass serves every seed-subset estimator built on a prefix of the
     lowest-id seed order (see ``betweenness_approx_error_report``).
 
@@ -289,7 +289,7 @@ def betweenness_fixed_point(
     ``k`` highest fixed-point Brandes dependency totals over the
     ``n_seeds`` lowest-id seeds (ties → lowest node id). Materializes
     the k-row result eagerly so every per-level cache can be released
-    before returning (the hits_fp unpersist discipline). Pass
+    before returning. Pass
     ``owns_adj=False`` when ``adj`` is a caller-owned session artifact
     (``walks.cached_copurchase_adjacency``) that must stay persisted.
     ``n_vertices`` drives the broadcast-state dispatch (None = the safe

@@ -1,6 +1,8 @@
-"""Per-iteration lineage truncation and static planning for the
-iterative algorithms (the superstep loops, PageRank/PPR, HITS, MIS,
-HyperBall, betweenness).
+"""Per-iteration lineage truncation, static planning and the partition
+budget for the iterative algorithms: the superstep operator
+(``superstep.py``, which runs SSSP/BFS, components, LPA, PageRank/PPR,
+HITS, k-core and MIS) and the loops still on their own (HyperBall,
+betweenness).
 
 WHY truncate at all: the state vector enters each iteration's plan twice
 (message join + state join), so without truncation the logical plan
@@ -73,7 +75,7 @@ def static_planning(spark, shuffle_partitions: int | None = None):
     exactly ONE exchange (the message combine) with zero broadcasts
     (2.3× on component_sizes: 9.7 → 4.1 s warm). AQE's skew/coalesce
     value targets scan-shaped stages, not these |V|-bounded state frames
-    whose width the loop already budgets via ``state_partitions``."""
+    whose width the loop already budgets via ``graph_partitions``."""
     conf = spark.conf
     app = spark.sparkContext.applicationId
     with _PLANNING_LOCK:
@@ -152,8 +154,8 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 # and dies at Spark's 8 GB broadcast hard limit long before 100 TB — the
 # fallback is the co-partitioned shuffle path with identical results (every
 # per-round combine in the tier is MIN/MAX/SUM over exact integers —
-# order-free). Used by pagerank and betweenness; the superstep loops
-# (``superstep.py``) never broadcast.
+# order-free). Used by betweenness; the superstep loops (``superstep.py``)
+# never broadcast.
 BROADCAST_STATE_MAX_VERTICES = 5_000_000
 
 
@@ -170,26 +172,12 @@ def resolve_broadcast_state(
     return n_vertices is not None and n_vertices <= BROADCAST_STATE_MAX_VERTICES
 
 
-# Vertex-rows per iteration-state partition. The iterative loops size their
-# per-round exchanges off the STATE dimension, not the session shuffle
-# width: dimension-sized frames at full width burn task-scheduling overhead
-# (measured r6, pagerank: 66-wide half-steps ~12 s/iteration at sf0.01;
-# 1-wide well under 1 s), while 1 partition serializes the per-round
-# edge-join once the graph clears a few hundred thousand edges (measured
-# r12, HITS at sf0.1: 1-wide half-steps 1.8-2.0 s vs 0.8-1.2 s at 8-wide —
-# 1.4× on the whole query). ~25k vertices per partition keeps sf0.01-sized
-# graphs at 1 partition (no regression at the oracle scales) and gives the
-# sf0.1 tier ~7-way parallelism; the cap at the session's default
-# parallelism stops a 1B-vertex graph from scheduling 40k tiny tasks —
-# on a real cluster the cap IS the cluster width.
-STATE_ROWS_PER_PARTITION = 25_000
-
-
-def state_partitions(n_vertices: int, df: DataFrame) -> int:
-    """Partition budget for a vertex-dimension iteration-state frame."""
-    width = df.sparkSession.sparkContext.defaultParallelism
-    return max(1, min(int(width), int(n_vertices // STATE_ROWS_PER_PARTITION)))
-
+# Vertex-rows per iteration-state partition: |V|-sized frames at full
+# width burn task-scheduling overhead, while 1 partition serializes the
+# per-round edge join once the graph clears a few hundred thousand edges.
+# ~25k vertices per partition keeps sf0.01-sized graphs at 1 partition
+# and gives the sf0.1 tier ~7-way parallelism.
+VERTEX_ROWS_PER_PARTITION = 25_000
 
 # Edge-message rows per partition for the co-partitioned loops' shared
 # partition count: on a DENSE graph (|E| >> |V|, e.g. the co-purchase
@@ -219,7 +207,7 @@ def graph_partitions(n_vertices: int, n_edges: int, df: DataFrame) -> int:
         min(
             int(width),
             max(
-                int(n_vertices // STATE_ROWS_PER_PARTITION),
+                int(n_vertices // VERTEX_ROWS_PER_PARTITION),
                 int(n_edges // EDGE_ROWS_PER_PARTITION),
             ),
         ),

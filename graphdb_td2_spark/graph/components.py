@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries import cached_graph
-from .superstep import min_send, run_supersteps, symmetric_edges
+from .superstep import CHANGED, edge_send, run_supersteps, symmetric_edges
 
 # Safety valve only — propagation stops at the first unchanged round (the
 # corpus graph converges in <10).
@@ -52,18 +52,18 @@ def connected_components(
     ``max_iter`` rounds end before a round that changes no label."""
     if und is None:
         und, n_parts = symmetric_edges(edges), None
-    labels, halted = run_supersteps(
+    labels, rows = run_supersteps(
         vertices.select("id", F.col("id").alias("component")),
         und,
-        min_send(F.col("component")),
+        edge_send(F.col("component")),
         # least() skips NULLs: isolated vertices (msg NULL) keep their label
-        merge=[F.least("msg", "component").alias("component")],
+        merge=lambda agg, step: [F.least("msg", "component").alias("component")],
         changed=F.col("msg") < F.col("component"),
         max_rounds=max_iter,
         n_parts=n_parts,
         n_vertices=n_vertices,
     )
-    if not halted:
+    if not rows or rows[-1][CHANGED]:
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter}"
             " rounds"

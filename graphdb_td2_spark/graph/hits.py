@@ -6,37 +6,28 @@ PageRank TODO (``/root/reference/app/main.py:31-33``); HITS is the natural
 companion ranking for a bipartite-ish commerce graph: orders/customers that
 *point at* many well-endorsed products are hubs, products *pointed at* by
 many strong hubs are authorities. Like PageRank (``graph/pagerank.py``),
-the loop is the genuinely iterative piece Catalyst cannot express
-(SURVEY.md §4 custom-work item 1), so it follows the same DataFrame
-power-iteration discipline — and, since r13, the same CO-PARTITIONED
-physical shape: the score vector is hash-partitioned by ``id`` into
-``state_partitions(|V|)`` and the edge relation is checkpointed TWICE,
-once partitioned by ``src`` and once by ``dst`` (the half-steps alternate
-join keys), under ``static_planning`` (AQE off inside the loop) so every
-checkpoint keeps its partitioning. Each half-step then plans to exactly
-ONE exchange (the message combine) with zero broadcasts — the same shape
-at every scale, replacing the old dimension-sized broadcast dispatch
-(which collected the |V|-sized vector to the driver per half-step and
-measured slower at sf0.1). Exactly ONE driver action per half-step — the
-1-row normalization total, whose collect doubles as the materialization
-of the previous half-step's lazily-checkpointed score vector (the
-pagerank dangling-mass fold).
+the loop runs on the superstep operator (``graph/superstep.py``), one
+half-step per superstep: even supersteps ship hub scores along the edges
+(authorities), odd ones ship authority scores along the reversed edges
+(hubs).
 
 Exactness (the whole point of the fixed-point formulation): scores are
 scaled BIGINTs. A plain L1/L2 normalization divides by a data-dependent
 total — in floats that is engine-divergent; here each half-step computes
 
     raw_auth(v) = SUM over in-edges of hub(u)          (exact BIGINT)
-    norm        = GREATEST(total_raw div FP_SCALE, 1)   (one 1-row agg)
+    norm        = GREATEST(total_raw div FP_SCALE, 1)   (a per-round aggregate)
     auth(v)     = raw_auth(v) div norm                  (exact BIGINT)
 
 which keeps every intermediate an integer — summation order cannot perturb
 anything, so the unrolled-CTE DuckDB oracle in ``__spark_entry__.py``
 (``_hits_fp_sql``) reproduces the scores bit-for-bit and the iterative
-tier gets a full value-hash check, not a rows-only one. The div-based
-rescale keeps the vector's L1 mass at ~FP_SCALE so products never leave
-int64: raw ≤ in_degree·FP_SCALE ≤ |E|·FP_SCALE, and nothing is ever
-multiplied back up.
+tier gets a full value-hash check, not a rows-only one. A half-step
+stores its raw sums, and the superstep after it divides them by the norm
+of their aggregated total. The div-based rescale keeps the vector's L1
+mass at ~FP_SCALE so products never leave int64: raw ≤
+in_degree·FP_SCALE ≤ |E|·FP_SCALE, and nothing is ever multiplied back
+up.
 """
 
 from __future__ import annotations
@@ -44,8 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..caching import memo
-from .checkpointing import graph_partitions, static_planning, truncate_lineage
+from .checkpointing import graph_partitions, static_planning
 from .pagerank import FP_SCALE
+from .superstep import edge_send, run_supersteps
 
 HITS_ITER = 4
 
@@ -53,16 +45,16 @@ HITS_ITER = 4
 class PreparedHITSGraph:
     """Loop-shaped static frames for ``hits_fp`` (cacheable per
     session/corpus): the distinct vertex set partitioned by ``id`` and
-    the edge relation checkpointed under both half-step partitionings."""
+    the edge relation in both directions, each partitioned by ``src``."""
 
-    __slots__ = ("verts", "n_vertices", "parts", "e_src", "e_dst")
+    __slots__ = ("verts", "n_vertices", "parts", "e_src", "e_rev")
 
-    def __init__(self, verts, n_vertices, parts, e_src, e_dst):
+    def __init__(self, verts, n_vertices, parts, e_src, e_rev):
         self.verts = verts          # (id), hash(id, parts)
         self.n_vertices = n_vertices
         self.parts = parts
         self.e_src = e_src          # (src, dst), hash(src, parts)
-        self.e_dst = e_dst          # (src, dst), hash(dst, parts)
+        self.e_rev = e_rev          # (src, dst) reversed, hash(src, parts)
 
 
 def prepare_hits_graph(edges: DataFrame) -> PreparedHITSGraph:
@@ -82,8 +74,12 @@ def prepare_hits_graph(edges: DataFrame) -> PreparedHITSGraph:
         # than serialized checkpoint blocks (8 scans per hits_fp call)
         verts = verts_raw.repartition(parts, "id").persist()
         e_src = edges.repartition(parts, "src").persist()
-        e_dst = e_src.repartition(parts, "dst").persist()
-    return PreparedHITSGraph(verts, n_vertices, parts, e_src, e_dst)
+        e_rev = (
+            e_src.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            .repartition(parts, "src")
+            .persist()
+        )
+    return PreparedHITSGraph(verts, n_vertices, parts, e_src, e_rev)
 
 
 def cached_hits_graph(spark: SparkSession, sf_dir: str) -> PreparedHITSGraph:
@@ -114,60 +110,55 @@ def hits_fp(
     assert num_iter >= 1, "HITS needs at least one full round"
     if prepared is None:
         prepared = prepare_hits_graph(edges)
-    spark = prepared.verts.sparkSession
-    verts, parts = prepared.verts, prepared.parts
-    by_key = {"src": prepared.e_src, "dst": prepared.e_dst}
 
-    # ONE driver action per half-step (the pagerank dangling-mass fold):
-    # the normalization total's collect doubles as the materialization of
-    # the PREVIOUS half-step's lazily-checkpointed score vector. The
-    # message aggregate is persisted across its two uses (1-row total,
-    # then the state join); since the new vector is checkpointed LAZILY,
-    # the persist is released one half-step LATE — live state stays
-    # bounded at 2×edges + vertices + one score vector + two |V|-row
-    # aggregates.
-    prev_raw: list[DataFrame] = []
+    def norm(agg, step: int, col: str) -> int:
+        # ``col`` holds the raw sums of the previous half-step; the initial
+        # hub vector is already at FP_SCALE per vertex
+        return 1 if step == 0 else max(agg[f"{col}_total"] // FP_SCALE, 1)
 
-    def _half_step(scores: DataFrame, score_col: str, join_on: str,
-                   group_on: str, out_col: str) -> DataFrame:
-        """One endorsement pass: ship ``score_col`` along edges joined on
-        ``join_on``, aggregate by ``group_on``, renormalize to ~FP_SCALE
-        mass with an exact integer div. Both joins are co-partitioned
-        (scores arrive partitioned by id → aliased to the join key), so
-        the only exchange is the message combine."""
-        side = scores.select(F.col("id").alias(join_on), score_col)
-        raw = (
-            by_key[join_on].join(side.hint("shuffle_hash"), join_on)
-            .groupBy(F.col(group_on).alias("id"))
-            .agg(F.sum(score_col).alias("raw"))
-            .persist()
-        )
-        total = int(raw.agg(F.coalesce(F.sum("raw"), F.lit(0))).first()[0])
-        if prev_raw:
-            prev_raw.pop().unpersist()
-        norm = max(total // FP_SCALE, 1)
-        out = verts.join(raw.hint("shuffle_hash"), "id", "left").select(
+    def roles(step: int) -> tuple[str, str]:
+        # (the column the half-step sums, the column it ships): even
+        # supersteps sum hubs into authorities along the edges, odd ones
+        # authorities into hubs along the reversed edges
+        return ("auth", "hub") if step % 2 == 0 else ("hub", "auth")
+
+    def send(und, state, frontier, agg, step):
+        adj = prepared.e_src if step % 2 == 0 else prepared.e_rev
+        old = roles(step)[1]
+        shipped = F.expr(f"{old} div {norm(agg, step, old)}")
+        return edge_send(shipped, F.sum)(adj, state, frontier, agg, step)
+
+    def merge(agg, step):
+        new, old = roles(step)
+        cols = {
+            new: F.coalesce(F.col("msg"), F.lit(0)).cast("long"),
+            old: F.expr(f"{old} div {norm(agg, step, old)}"),
+        }
+        return [cols["auth"].alias("auth"), cols["hub"].alias("hub")]
+
+    scores, rows = run_supersteps(
+        prepared.verts.select(
             "id",
-            F.expr(f"coalesce(raw, cast(0 as bigint)) div {norm}").alias(out_col),
-        )
-        prev_raw.append(raw)
-        return out.transform(truncate_lineage, eager=False)
-
-    with static_planning(spark, shuffle_partitions=parts):
-        hubs = verts.select("id", F.lit(FP_SCALE).cast("long").alias("hub"))
-        auths = None
-        for _ in range(num_iter):
-            auths = _half_step(hubs, "hub", "src", "dst", "auth")
-            hubs = _half_step(auths, "auth", "dst", "src", "hub")
-        out = auths.join(hubs.hint("shuffle_hash"), "id").select(
-            "id", F.col("auth").alias("auth_fp"), F.col("hub").alias("hub_fp")
-        )
-        # Materialize the final vector (truncate_lineage is eager), then
-        # release the iteration-scoped aggregate cache — the prepared
-        # frames are caller-owned (session artifacts) and stay.
-        out = out.transform(truncate_lineage, eager=True)
-    prev_raw.pop().unpersist()
-    return out
+            F.lit(0).cast("long").alias("auth"),
+            F.lit(FP_SCALE).cast("long").alias("hub"),
+        ),
+        prepared.e_src,
+        send,
+        merge,
+        changed=F.lit(True),
+        max_rounds=2 * num_iter,
+        aggregates=[
+            F.coalesce(F.sum(c), F.lit(0)).cast("long").alias(f"{c}_total")
+            for c in ("auth", "hub")
+        ],
+        n_parts=prepared.parts,
+    )
+    # the last half-step (hub) left raw sums
+    return scores.select(
+        "id",
+        F.col("auth").alias("auth_fp"),
+        F.expr(f"hub div {norm(rows[-1], 1, 'hub')}").alias("hub_fp"),
+    )
 
 
 def hits_top20(spark: SparkSession, sf_dir: str) -> DataFrame:

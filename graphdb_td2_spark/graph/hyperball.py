@@ -237,7 +237,7 @@ def _hyperball_rounds(
         # round-9 scale report in git history) — the extra state⋈maxes exchange costs
         # more than the checkpoint it saves; one wide map-side-combined
         # aggregate stays the cheapest way to merge sketches.
-        # Lazy checkpoints (the hits_fp one-action-per-round discipline):
+        # Lazy checkpoints (one driver action per round):
         # the round's single driver action is changed.isEmpty() below —
         # its job computes the changed frame, whose inputs chain through
         # this frame. Both marked frames materialize off that ONE action

@@ -10,46 +10,25 @@ rounds (like ``bfs.py``), so intermediate states match even before
 convergence; the per-round surviving-vertex counts are the query output
 (monotone non-increasing, and constant once converged).
 
-Execution strategy (r9 rewrite — the r8 version re-filtered and
-re-checkpointed the FULL edge set every round through two shuffled
-semi-joins, the round-8 sf10 wall at 811 s): peel INCREMENTALLY.
-
-- The symmetric edge set is shuffled/materialized ONCE (distinct) and
-  the initial degree table once more; both are edge/vertex-scale
-  one-time costs shared with any degree query.
-- Each subsequent round touches only the DELTA: vertices removed last
-  round are a (typically tiny, always vertex-scale) set; the edges they
-  take with them are found by one map-side (broadcast when small)
-  semi-join over the cached symmetric edges, combined map-side into a
-  per-survivor loss count, and subtracted from the vertex-sized degree
-  table. No edge-set rewrite, no edge-scale checkpoint, ever again —
-  removal sets are disjoint across rounds, so cumulative subtraction
-  equals the degree in the surviving subgraph.
-- Fixed point short-circuits: once a round removes nothing, every later
-  round's count is definitionally identical — appended without jobs.
-
-At 100 TB: one distinct + one degree shuffle over the edges, then R
-map-scans of the cached edge relation with vertex-scale aggregates —
-the first two stages are plain word-count-shaped and AQE-sized; the
-loop state (degree table + removal set) is vertex-sized, so lineage
-truncation per round is cheap regardless of edge count.
+Peeling is incremental, one superstep (``graph/superstep.py``) per round:
+the state is ``(id, deg, alive)``, the frontier is the vertices removed
+last round, and each sends one message per edge it takes with it, summed
+per neighbor and subtracted from that neighbor's degree. Removal sets are
+disjoint across rounds, so the cumulative subtraction equals the degree
+in the surviving subgraph, and no round rewrites the edge set. The
+surviving count is a per-round aggregate; once a round removes nothing
+the loop halts and the remaining rounds repeat its count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpointing import truncate_lineage
 from .queries import cached_graph
+from .superstep import edge_send, run_supersteps, symmetric_edges
 
 KCORE_K = 2
 KCORE_ROUNDS = 6
-
-# Removal sets at or under this many vertices ship as broadcast hash
-# relations for the delta semi-join (8-byte ids → ~40 MB at the cap);
-# bigger sets (only ever the first peel of a pendant-heavy graph) fall
-# back to a shuffled semi-join.
-_BROADCAST_REMOVED_MAX = 5_000_000
 
 
 def kcore_round_sizes(
@@ -57,78 +36,49 @@ def kcore_round_sizes(
     k: int = KCORE_K,
     rounds: int = KCORE_ROUNDS,
     und: DataFrame | None = None,
+    n_parts: int | None = None,
 ) -> DataFrame:
     """``(round, n_vertices)`` after each of ``rounds`` peeling steps over
     the undirected multigraph-collapsed edge set. ``und``: caller-owned
-    prebuilt undirected relation (the session lake artifact,
-    ``graph.queries.cached_und_edges``) — saves the per-call |E| distinct
-    shuffle + checkpoint; derived call-scoped otherwise."""
+    loop-shaped undirected relation (the session lake artifact,
+    ``graph.queries.cached_und_edges``), passed with its budget
+    ``n_parts``; derived call-scoped from ``edges`` otherwise."""
     spark = edges.sparkSession
     if und is None:
-        # The local checkpoint IS the cache: its serialized blocks are
-        # re-read by every round's delta scan (an extra .persist() here
-        # stores a second DESERIALIZED copy and OOMed the sf10 rehearsal's
-        # hash aggregates).
-        und = (
-            edges.select("src", "dst")
-            .union(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .transform(truncate_lineage)
-        )
-    deg = (
+        und, n_parts = symmetric_edges(edges), None
+    deg = F.col("deg") - F.coalesce(F.col("msg"), F.lit(0))
+    _, rows = run_supersteps(
         und.groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .transform(truncate_lineage)
+        .withColumn("alive", F.lit(True)),
+        und,
+        edge_send(F.lit(1), F.sum),
+        merge=lambda agg, step: [
+            deg.alias("deg"),
+            (F.col("alive") & (deg >= k)).alias("alive"),
+        ],
+        changed=F.col("alive") & (deg < k),
+        max_rounds=rounds,
+        active=F.lit(False),
+        aggregates=[F.count(F.when(F.col("alive"), True)).alias("n_alive")],
+        n_parts=n_parts,
     )
-    sizes: list[tuple[int, int]] = []
-    removed: DataFrame | None = None
-    n_removed = -1  # sentinel: round 1 always evaluates
-    for r in range(1, rounds + 1):
-        if r > 1 and n_removed == 0:
-            sizes.append((r, sizes[-1][1]))  # converged: fixed point
-            continue
-        if r > 1:
-            gone = removed.select(F.col("id").alias("dst"))
-            if n_removed <= _BROADCAST_REMOVED_MAX:
-                gone = F.broadcast(gone)
-            lost = (
-                und.join(gone, "dst", "left_semi")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.count(F.lit(1)).cast("long").alias("lost"))
-            )
-            # Lazy checkpoints (the hits_fp one-action-per-round
-            # discipline): the chained removed.count() below materializes
-            # BOTH this frame's checkpoint and removed's — the prior eager
-            # pair spent three driver actions per round on the same work.
-            deg = (
-                deg.join(lost, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.col("deg") - F.coalesce(F.col("lost"), F.lit(0))
-                    ).alias("deg"),
-                )
-                .transform(truncate_lineage, eager=False)
-            )
-        removed = deg.filter(F.col("deg") < k).select("id").transform(
-            truncate_lineage, eager=False
-        )
-        n_removed = removed.count()
-        deg = deg.filter(F.col("deg") >= k)
-        n_alive = deg.count() if r == 1 else sizes[-1][1] - n_removed
-        sizes.append((r, n_alive))
-    return spark.createDataFrame(sizes, "round long, n_vertices long")
+    sizes = [r["n_alive"] for r in rows]
+    sizes += sizes[-1:] * (rounds - len(sizes))
+    return spark.createDataFrame(
+        list(enumerate(sizes, 1)), "round long, n_vertices long"
+    )
 
 
 def kcore_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: per-round surviving-vertex counts of 2-core peeling
     over the full property graph (fixed 6 rounds, oracle-exact — the
     DuckDB twin unrolls the same rounds as chained CTEs)."""
-    from .queries import cached_und_edges
+    from .queries import cached_und_edges, property_graph_parts
 
     g = cached_graph(spark, sf_dir)
     return kcore_round_sizes(
-        g.edges.select("src", "dst"), und=cached_und_edges(spark, sf_dir)
+        g.edges.select("src", "dst"),
+        und=cached_und_edges(spark, sf_dir),
+        n_parts=property_graph_parts(spark, sf_dir),
     ).orderBy("round")

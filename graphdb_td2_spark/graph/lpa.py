@@ -53,7 +53,9 @@ def _cached_labels(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
     return memo(spark, ("labels", sf_dir.rstrip("/"), rounds), build)
 
 
-def _send(und: DataFrame, state: DataFrame, frontier: DataFrame) -> DataFrame:
+def _send(
+    und: DataFrame, state: DataFrame, frontier: DataFrame, agg, step
+) -> DataFrame:
     top1 = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
     votes = (
         und.join(state.hint("shuffle_hash"), und.src == state.id)
@@ -90,7 +92,7 @@ def label_propagation(
         vertices.select("id", F.col("id").alias("lbl")),
         und,
         _send,
-        merge=[F.coalesce("new_lbl", "lbl").alias("lbl")],
+        merge=lambda agg, step: [F.coalesce("new_lbl", "lbl").alias("lbl")],
         changed=F.col("new_lbl") != F.col("lbl"),
         max_rounds=rounds,
         n_parts=n_parts,

@@ -20,24 +20,18 @@ absorbed, and the oracle unrolls the identical fixed number of rounds.
 Luby's analysis removes a constant fraction of EDGES per round in
 expectation; on every tested corpus the active set hits zero within 4.
 
-Physical shape (r13, the components/pagerank co-partitioned discipline —
-this replaced the broadcast-state dispatch): the co-purchase adjacency
-is SYMMETRIC, so every per-round relation is derivable with src-keyed
-joins only —
+Each round is one superstep (``graph/superstep.py``) whose frontier is
+the active set. The co-purchase adjacency is SYMMETRIC, so every
+per-round relation is derivable with src-keyed joins only —
 
     min_nb(v) = min p(u) over active neighbors u
               = groupBy dst of p(src) over (adj ⋈ active priorities ON src)
 
-(by symmetry the dst-grouped min over active srcs IS the neighbor-min;
-inactive dst rows fall out of the left join from the active state), and
-neighbors-of-selected is the dst set of (adj ⋈ selected ON src). With
-the adjacency src-partitioned (the cached lake artifact) and the active
-state id-partitioned under ``static_planning``, a round plans to TWO
-exchanges (the min-neighbor combine and the neighbor-set distinct — both
-message-scale) with zero broadcasts, one lazily-checkpointed state frame,
-and ONE driver action (the two-sum flag aggregate, which doubles as the
-checkpoint materialization and yields n_selected/n_removed; n_active is
-tracked arithmetically from the stats sidecar's |V|). Results are
+(by symmetry the dst-grouped min over active srcs IS the neighbor-min),
+and neighbors-of-selected is the dst set of (adj ⋈ selected ON src): two
+message-scale exchanges per round. A vertex stays in the frontier while
+it is undecided, so the operator's changed count is ``n_remaining``;
+``n_selected`` and ``n_removed`` are per-round aggregates. Results are
 identical to the explicit semi/anti formulation: every combine is a MIN
 or a set membership over exact keys.
 """
@@ -46,7 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpointing import graph_partitions, static_planning, truncate_lineage
+from .checkpointing import graph_partitions
+from .superstep import CHANGED, run_supersteps
 from .walks import cached_copurchase_adjacency
 
 MIS_ROUNDS = 6
@@ -76,6 +71,32 @@ def _priority(node: F.Column) -> F.Column:
     return F.concat(F.md5(s), F.lpad(s, 20, "0"))
 
 
+def _send(adj, state, frontier, agg, step):
+    """``(id, sel, nb)`` for each active vertex: whether it selects itself
+    (its priority precedes every active neighbor's) and whether a
+    neighbor selected itself."""
+    a_src = frontier.select(F.col("id").alias("src"), F.col("p").alias("ps"))
+    min_nb = (
+        adj.join(a_src.hint("shuffle_hash"), "src")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min("ps").alias("min_nb"))
+    )
+    cand = frontier.join(min_nb.hint("shuffle_hash"), "id", "left").select(
+        "id",
+        (F.col("min_nb").isNull() | (F.col("p") < F.col("min_nb"))).alias("sel"),
+    )
+    sel_src = cand.filter("sel").select(F.col("id").alias("src"))
+    nbr = (
+        adj.join(sel_src.hint("shuffle_hash"), "src", "left_semi")
+        .select(F.col("dst").alias("id"))
+        .distinct()
+        .withColumn("nb", F.lit(True))
+    )
+    return cand.join(nbr.hint("shuffle_hash"), "id", "left").select(
+        "id", "sel", F.col("nb").isNotNull().alias("nb")
+    )
+
+
 def mis_round_sizes(
     spark: SparkSession,
     sf_dir: str,
@@ -86,64 +107,35 @@ def mis_round_sizes(
     many vertices deactivated in total (selected + their neighbors),
     and how many stay active. Ordered by round."""
     adj = cached_copurchase_adjacency(spark, sf_dir)
-    parts = _copurchase_parts(spark, sf_dir, adj)
-    rows = []
-    with static_planning(spark, shuffle_partitions=parts):
-        active = truncate_lineage(
-            adj.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", _priority(F.col("node")).alias("p"))
-            .repartition(parts, "node")
-        )
-        for r in range(1, rounds + 1):
-            a_src = active.select(F.col("node").alias("src"), F.col("p").alias("ps"))
-            min_nb = (
-                adj.join(a_src.hint("shuffle_hash"), "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("ps").alias("min_nb"))
-            )
-            cand = active.join(min_nb.hint("shuffle_hash"), "node", "left").select(
-                "node",
-                "p",
-                (
-                    F.col("min_nb").isNull() | (F.col("p") < F.col("min_nb"))
-                ).alias("sel"),
-            )
-            sel_src = cand.filter("sel").select(F.col("node").alias("src"))
-            nbr = (
-                adj.join(sel_src.hint("shuffle_hash"), "src", "left_semi")
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .withColumn("nb", F.lit(True))
-            )
-            state = truncate_lineage(
-                cand.join(nbr.hint("shuffle_hash"), "node", "left"),
-                eager=False,
-            )
-            # ONE action: n_active rides along as the row count, so the
-            # remaining-count needs no separate job and no caller-supplied
-            # total (state rows ARE this round's active set)
-            cnt = state.agg(
-                F.count(F.lit(1)).cast("long").alias("n_active"),
-                F.coalesce(
-                    F.sum(F.when(F.col("sel"), 1)), F.lit(0)
-                ).cast("long").alias("n_selected"),
-                F.coalesce(
-                    F.sum(F.when(F.col("sel") | F.col("nb").isNotNull(), 1)),
-                    F.lit(0),
-                ).cast("long").alias("n_removed"),
-            ).first()
-            rows.append(
-                (
-                    r,
-                    cnt["n_selected"],
-                    cnt["n_removed"],
-                    cnt["n_active"] - cnt["n_removed"],
-                )
-            )
-            active = state.filter(
-                ~(F.col("sel") | F.col("nb").isNotNull())
-            ).select("node", "p")
+    decided = F.coalesce(F.col("sel") | F.col("nb"), F.lit(False))
+    _, rows = run_supersteps(
+        adj.select(F.col("src").alias("id"))
+        .distinct()
+        .select(
+            "id",
+            _priority(F.col("id")).alias("p"),
+            F.lit(False).alias("selected"),
+            F.lit(False).alias("removed"),
+        ),
+        adj,
+        _send,
+        merge=lambda agg, step: [
+            F.col("p"),
+            F.coalesce(F.col("sel"), F.lit(False)).alias("selected"),
+            decided.alias("removed"),
+        ],
+        # inactive vertices get no message: sel and nb are NULL
+        changed=F.col("sel").isNotNull() & ~decided,
+        max_rounds=rounds,
+        aggregates=[
+            F.count(F.when(F.col(c), True)).alias(f"n_{c}")
+            for c in ("selected", "removed")
+        ],
+        n_parts=_copurchase_parts(spark, sf_dir, adj),
+    )
+    out = [(r["n_selected"], r["n_removed"], r[CHANGED]) for r in rows]
+    out += [(0, 0, 0)] * (rounds - len(out))
     return spark.createDataFrame(
-        rows, "round long, n_selected long, n_removed long, n_remaining long"
+        [(i, *r) for i, r in enumerate(out, 1)],
+        "round long, n_selected long, n_removed long, n_remaining long",
     ).orderBy("round")

@@ -2,35 +2,37 @@
 (``app/main.py:31-33``: "Switch to Personalized PageRank (PPR) when GDS is
 present"; the GDS plugin is installed but unused, ``docker-compose.yml:23``).
 
-Catalyst cannot express iteration (SURVEY.md §4), so this is the one
-genuinely imperative loop in the engine: a DataFrame power iteration in the
-GraphX/Pregel spirit — per-iteration message = rank/out_degree shipped along
-edges, aggregated by destination, with damping and dangling-mass
-redistribution. PySpark exposes no GraphX bindings, so the DataFrame loop is
-the idiomatic route (it is also what GraphFrames does under the hood for its
-non-GraphX paths).
+Catalyst cannot express iteration (SURVEY.md §4), so the power iteration
+runs on the superstep operator (``graph/superstep.py``), in the
+GraphX/Pregel spirit: each superstep ships ``rank·w div out_degree`` along
+the edges, sums it by destination and merges it with damping; the mass on
+dangling vertices (no out-edges) is a per-round aggregate that the next
+round redistributes through the teleport vector.
 
-Scale notes: each iteration is one shuffle (groupBy dst), with the rank
-vector broadcast into the message join when it is dimension-sized (the
-shuffle join co-partitioning edges and ranks takes over past
-``_BROADCAST_RANKS_MAX``). Lineage is truncated EVERY iteration — see the
-in-loop comment for why that is load-bearing — via the session's
-checkpoint mode (``graph/checkpointing.py``: executor-local by default,
-reliable FS-backed on a real cluster), and each iteration costs exactly
-one driver action.
+IEEE-754 summation is order-dependent, so a float power iteration can never
+be value-hash-compared across engines. This formulation keeps every
+intermediate an INTEGER: ranks are scaled BIGINTs, per-edge contribution is
+``rank·w div out_degree``, damping is (dnum/dden) applied via integer
+division. Integer sums are associative and integer division is
+deterministic, so DuckDB (which evaluates the same recurrence as unrolled
+CTEs in ``__spark_entry__.py``) reproduces bit-identical ranks.
+
+Overflow bound (int64): rank mass never exceeds FP_SCALE (floors only shed
+mass), so dangling*reset <= FP_SCALE^2 = 1e18 < 2^63, and
+FP_DNUM*(msg + dangling_term) <= 85 * 2*FP_SCALE ~ 1.7e11.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Row, functions as F
 
-from .checkpointing import (
-    BROADCAST_STATE_MAX_VERTICES,
-    graph_partitions,
-    state_partitions,
-    static_planning,
-    truncate_lineage,
-)
+from .checkpointing import graph_partitions, static_planning
+from .superstep import edge_send, run_supersteps
+
+FP_SCALE = 10**9
+FP_DNUM = 85  # damping numerator
+FP_DDEN = 100  # damping denominator
+
 
 def _vertices_of(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return (
@@ -40,149 +42,12 @@ def _vertices_of(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-# Vertex count below which the rank vector broadcasts (dimension-sized);
-# above, the shuffle join co-partitions edges and ranks — the GraphX-style
-# scale path. Since r13 the bar is the tier-wide constant in
-# ``checkpointing.py`` (this alias keeps the historical name for hits.py
-# and the perf notes).
-_BROADCAST_RANKS_MAX = BROADCAST_STATE_MAX_VERTICES
-
-
-def _iterate(
-    edges: DataFrame,
-    vertices: DataFrame,
-    reset: DataFrame,  # id, reset  (teleport distribution, sums to 1)
-    num_iter: int,
-    damping: float,
-    src: str,
-    dst: str,
-    n_vertices: int | None = None,
-) -> DataFrame:
-    small = n_vertices is not None and n_vertices <= _BROADCAST_RANKS_MAX
-    # Partition budget: iteration state is vertex-sized; running it on the
-    # session's full shuffle-partition count burns task overhead when the
-    # graph is dimension-sized; 1 partition serializes the per-round edge
-    # join once the graph clears a few hundred thousand edges. Sizing is
-    # shared across the iterative tier (checkpointing.state_partitions).
-    if small:
-        parts = state_partitions(n_vertices, edges)
-        vertices = vertices.repartition(parts)
-        reset = reset.repartition(parts)
-        edges = edges.repartition(parts, F.col(src))
-    edges = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-    edges = edges.persist()
-    out_deg = out_deg.persist()
-
-    # Iteration state is (id, rank, reset, is_dangling): carrying the static
-    # teleport weight and dangling flag inside the vector means an iteration
-    # needs NO extra joins against vertices/reset and exactly ONE driver
-    # action — the dangling-mass aggregate, which doubles as the
-    # materialization of the (lazily) checkpointed vector.
-    #
-    # The rank vector enters each update twice (message join + state join),
-    # so WITHOUT per-iteration lineage truncation the logical plan doubles
-    # every iteration — caching prevents re-execution but not re-analysis,
-    # and analysis over a 2^i-node tree dominated wall-clock (measured: the
-    # 4th un-truncated iteration cost 50x the 1st). truncate_lineage every
-    # iteration keeps the plan O(1) and iterations flat; its mode is
-    # session-configurable (local[.] default: localCheckpoint; cluster:
-    # use_reliable_checkpoints → FS-backed checkpoint(), survives executor
-    # death — see graph/checkpointing.py).
-    state = (
-        vertices.join(out_deg.select(F.col("src").alias("id"), "out_degree"), "id", "left")
-        .join(reset, "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("reset"), F.lit(0.0)).alias("reset"),
-            F.col("out_degree").isNull().alias("is_dangling"),
-        )
-        .withColumn("rank", F.col("reset"))
-        .transform(truncate_lineage, eager=True)
-    )
-
-    def materialize_and_dangling_mass(df: DataFrame) -> float:
-        row = df.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
-            )
-        ).first()
-        return float(row[0])
-
-    ranks = state
-    dangling = materialize_and_dangling_mass(ranks)
-    for i in range(num_iter):
-        rank_side = ranks.select(
-            F.col("id").alias("src"), "rank"
-        )
-        if small:
-            rank_side = F.broadcast(rank_side)
-        contribs = (
-            edges.join(rank_side, "src")
-            .join(out_deg, "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib").alias("msg"))
-        )
-        # Rank mass sitting on dangling vertices (no out-edges) is
-        # redistributed through the teleport vector, keeping sum(rank)=1.
-        # contribs is |V|-bounded: broadcast it into the merge so the
-        # checkpointed state is never re-exchanged (same bar as rank_side)
-        if small:
-            contribs = F.broadcast(contribs)
-        new_ranks = (
-            ranks.drop("rank")
-            .join(contribs, "id", "left")
-            .select(
-                "id",
-                "reset",
-                "is_dangling",
-                (
-                    (1.0 - damping) * F.col("reset")
-                    + damping
-                    * (F.coalesce(F.col("msg"), F.lit(0.0)) + dangling * F.col("reset"))
-                ).alias("rank"),
-            )
-        )
-        # Lazy checkpoint + one action: the dangling-mass aggregate both
-        # materializes the checkpoint and yields the next iteration's term.
-        new_ranks = new_ranks.transform(truncate_lineage, eager=False)
-        dangling = materialize_and_dangling_mass(new_ranks)
-        ranks = new_ranks
-    return ranks.select("id", "rank")
-
-
-# --- integer fixed-point formulation (exact, cross-engine checkable) ---------
-#
-# IEEE-754 summation is order-dependent, so a float power iteration can never
-# be value-hash-compared across engines. This formulation keeps every
-# intermediate an INTEGER: ranks are scaled BIGINTs, per-edge contribution is
-# rank div out_degree, damping is (dnum/dden) applied via integer division.
-# Integer sums are associative and integer division is deterministic, so
-# DuckDB (which evaluates the same recurrence as unrolled CTEs in
-# __spark_entry__.py) reproduces bit-identical ranks — giving the iterative
-# L3 tier a real oracle instead of a rows-only check.
-#
-# Overflow bound (int64): rank mass never exceeds FP_SCALE (floors only shed
-# mass), so dangling*reset <= FP_SCALE^2 = 1e18 < 2^63, and
-# FP_DNUM*(msg + dangling_term) <= 85 * 2*FP_SCALE ~ 1.7e11.
-
-FP_SCALE = 10**9
-FP_DNUM = 85  # damping numerator
-FP_DDEN = 100  # damping denominator
-
-
 class PreparedFPGraph:
     """Loop-shaped static frames for the integer power iteration — a
     derived lake artifact (cacheable per session/corpus, see
     ``queries.cached_fp_graph``): the distinct vertex set partitioned by
     ``id``, the edges carrying their static out-degree partitioned by
-    ``src``, both lineage-truncated under ``static_planning`` so every
-    iteration plans over LogicalRDD leaves that already satisfy the
-    joins' clustering requirements."""
+    ``src`` — the operator's caller-shaped adjacency."""
 
     __slots__ = ("vertices", "n_vertices", "parts", "edges_w")
 
@@ -199,9 +64,9 @@ def prepare_fp_graph(
     dst: str = "dst",
     weight: str | None = None,
 ) -> PreparedFPGraph:
-    """Shape ``edges`` for ``_iterate_fp`` (one-time per graph): derive
-    the vertex set, fold the static out-degree onto the edges, partition
-    both on their loop join keys and truncate lineage. The fold removes a
+    """Shape ``edges`` for the power iteration (one-time per graph):
+    derive the vertex set, fold the static out-degree onto the edges and
+    partition both on their loop join keys. The fold removes a
     per-iteration join; the partitioning removes every per-iteration
     exchange except the message combine."""
     spark = edges.sparkSession
@@ -236,111 +101,70 @@ def _iterate_fp(
     prepared: PreparedFPGraph,
     reset: DataFrame,  # id, reset (scaled BIGINT teleport weights)
     num_iter: int,
-    track_deltas: list | None = None,
-) -> DataFrame:
-    """Integer power iteration, CO-PARTITIONED (r13): edges carry their
-    out-degree as a static column and are hash-partitioned by ``src``
-    into ``state_partitions(|V|)``; the rank vector is partitioned by
-    ``id`` and every checkpoint preserves that partitioning (AQE off for
-    the loop via ``static_planning``), so each iteration plans to
-    exactly ONE exchange (the message combine) with zero broadcasts —
-    the same shape at every scale, replacing the old small-graph
-    broadcast dispatch (which collected the |V|-sized rank vector to the
-    driver twice per iteration and measured slower at sf0.1). Still
-    localCheckpoint every iteration and exactly one driver action per
-    iteration (the dangling-mass aggregate — with AQE off the lazy
-    checkpoint is genuinely lazy again). ``reset`` must derive from
-    ``prepared.vertices`` (so it is already partitioned by ``id``)."""
-    spark = prepared.edges_w.sparkSession
-    parts = prepared.parts
-    edges_w = prepared.edges_w
-
-    with static_planning(spark, shuffle_partitions=parts):
-        # per-vertex out-edge existence, exchange-free over the
-        # src-partitioned edges (dangling = never a source)
-        srcs = edges_w.select("src").distinct()
-        state = truncate_lineage(
-            prepared.vertices.join(
-                srcs.select(F.col("src").alias("id"))
-                .withColumn("has_out", F.lit(True))
-                .hint("shuffle_hash"),
-                "id",
-                "left",
-            )
-            .join(reset.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("reset"), F.lit(0)).cast("long").alias("reset"),
-                F.col("has_out").isNull().alias("is_dangling"),
-            )
-            .withColumn("rank", F.col("reset"))
+) -> tuple[DataFrame, list[Row]]:
+    """Integer power iteration → the final ``(id, rank_fp)`` and one
+    aggregate row per iteration: ``dangling`` (the rank mass on vertices
+    with no out-edge) and ``l1_delta`` (Σ|Δrank|, the convergence curve).
+    ``reset`` must derive from ``prepared.vertices``."""
+    srcs = prepared.edges_w.select("src").distinct()
+    init = (
+        prepared.vertices.join(
+            srcs.select(F.col("src").alias("id"))
+            .withColumn("has_out", F.lit(True))
+            .hint("shuffle_hash"),
+            "id",
+            "left",
         )
+        .join(reset.hint("shuffle_hash"), "id", "left")
+        .select(
+            "id",
+            F.coalesce(F.col("reset"), F.lit(0)).cast("long").alias("reset"),
+            F.col("has_out").isNull().alias("is_dangling"),
+        )
+        .withColumn("rank", F.col("reset"))
+        .withColumn("delta", F.lit(0).cast("long"))
+    )
 
-        def dangling_mass(df: DataFrame) -> int:
-            row = df.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0)
-                ).cast("long")
-            ).first()
-            return int(row[0])
+    def merge(agg: Row, step: int) -> list:
+        rank = F.expr(
+            f"(({FP_DDEN - FP_DNUM} * reset) div {FP_DDEN})"
+            f" + (({FP_DNUM} * (coalesce(msg, cast(0 as bigint))"
+            f" + (({agg['dangling']} * reset) div {FP_SCALE}))) div {FP_DDEN})"
+        )
+        return [
+            F.col("reset"),
+            F.col("is_dangling"),
+            rank.alias("rank"),
+            F.abs(rank - F.col("rank")).alias("delta"),
+        ]
 
-        ranks = state
-        dangling = dangling_mass(ranks)
-        for _ in range(num_iter):
-            rank_side = ranks.select(F.col("id").alias("src"), "rank")
-            contribs = (
-                edges_w.join(rank_side.hint("shuffle_hash"), "src")
-                .select(
-                    F.col("dst").alias("id"),
-                    F.expr("(rank * w) div out_degree").alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("msg"))
-            )
-            # with delta tracking the OLD rank rides along as __prev so the
-            # convergence sum folds into the SAME 1-row action as the
-            # dangling mass — tracking adds zero extra joins/actions per
-            # iteration; without tracking the code path (and its pinned
-            # plan) is unchanged
-            tracking = track_deltas is not None
-            base = (
-                ranks.withColumnRenamed("rank", "__prev")
-                if tracking
-                else ranks.drop("rank")
-            )
-            # |V|-bounded message aggregate merges shuffle-hash into the
-            # id-partitioned state — co-partitioned, so no exchange either
-            new_ranks = (
-                base.join(contribs.hint("shuffle_hash"), "id", "left")
-                .select(
-                    "id",
-                    "reset",
-                    "is_dangling",
-                    *(["__prev"] if tracking else []),
-                    F.expr(
-                        f"(({FP_DDEN - FP_DNUM} * reset) div {FP_DDEN})"
-                        f" + (({FP_DNUM} * (coalesce(msg, cast(0 as bigint))"
-                        f" + (({dangling} * reset) div {FP_SCALE}))) div {FP_DDEN})"
-                    ).alias("rank"),
-                )
-            )
-            new_ranks = new_ranks.transform(truncate_lineage, eager=False)
-            if tracking:
-                row = new_ranks.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0)
-                    ).cast("long"),
-                    F.coalesce(
-                        F.sum(F.abs(F.col("rank") - F.col("__prev"))), F.lit(0)
-                    ).cast("long"),
-                ).first()
-                dangling = int(row[0])
-                track_deltas.append(int(row[1]))
-                new_ranks = new_ranks.drop("__prev")
-            else:
-                dangling = dangling_mass(new_ranks)
-            ranks = new_ranks
-    return ranks.select("id", F.col("rank").alias("rank_fp"))
+    ranks, rows = run_supersteps(
+        init,
+        prepared.edges_w,
+        edge_send(F.expr("(rank * w) div out_degree"), F.sum),
+        merge,
+        changed=F.lit(True),
+        max_rounds=num_iter,
+        aggregates=[
+            F.coalesce(F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0))
+            .cast("long")
+            .alias("dangling"),
+            F.coalesce(F.sum("delta"), F.lit(0)).cast("long").alias("l1_delta"),
+        ],
+        n_parts=prepared.parts,
+    )
+    return ranks.select("id", F.col("rank").alias("rank_fp")), rows
+
+
+def pagerank_fp_rounds(
+    prepared: PreparedFPGraph, num_iter: int
+) -> tuple[DataFrame, list[Row]]:
+    """Uniform-teleport integer PageRank over a prepared graph: the final
+    ``(id, rank_fp)`` and the per-iteration rows of ``_iterate_fp``."""
+    reset = prepared.vertices.withColumn(
+        "reset", F.lit(FP_SCALE // prepared.n_vertices).cast("long")
+    )
+    return _iterate_fp(prepared, reset, num_iter)
 
 
 def pagerank_fp(
@@ -349,22 +173,17 @@ def pagerank_fp(
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    track_deltas: list | None = None,
     prepared: PreparedFPGraph | None = None,
 ) -> DataFrame:
     """Uniform-teleport integer PageRank → ``(id, rank_fp)`` with
     ``rank_fp ~ rank * FP_SCALE`` (exactly reproducible cross-engine).
     With ``weight``, mass flows proportionally to edge weights.
-    ``track_deltas``: optional list that receives the per-iteration L1
-    rank movement Σ|Δrank| (the convergence curve). ``prepared``: a
-    pre-shaped ``PreparedFPGraph`` of the SAME edge relation (the
-    session-cached lake artifact) — skips the per-call shaping."""
+    ``prepared``: a pre-shaped ``PreparedFPGraph`` of the SAME edge
+    relation (the session-cached lake artifact) — skips the per-call
+    shaping."""
     if prepared is None:
         prepared = prepare_fp_graph(edges, src, dst, weight)
-    reset = prepared.vertices.withColumn(
-        "reset", F.lit(FP_SCALE // prepared.n_vertices).cast("long")
-    )
-    return _iterate_fp(prepared, reset, num_iter, track_deltas=track_deltas)
+    return pagerank_fp_rounds(prepared, num_iter)[0]
 
 
 def personalized_pagerank_fp(
@@ -383,39 +202,4 @@ def personalized_pagerank_fp(
         "reset",
         F.when(F.col("id").isin(*seeds), F.lit(w)).otherwise(F.lit(0)).cast("long"),
     )
-    return _iterate_fp(prepared, reset, num_iter)
-
-
-def pagerank(
-    edges: DataFrame,
-    num_iter: int = 10,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Uniform-teleport PageRank over an edge DataFrame → ``(id, rank)``."""
-    vertices = _vertices_of(edges, src, dst).persist()
-    n = vertices.count()
-    reset = vertices.withColumn("reset", F.lit(1.0 / n))
-    return _iterate(edges, vertices, reset, num_iter, damping, src, dst, n_vertices=n)
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: list,
-    num_iter: int = 10,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """PPR: teleport only to ``seeds`` (uniformly across them) → the
-    recommendation scoring the reference wanted from Neo4j GDS
-    (``app/main.py:31-33``). Returns ``(id, rank)``."""
-    vertices = _vertices_of(edges, src, dst).persist()
-    n = vertices.count()
-    w = 1.0 / len(seeds)
-    reset = vertices.withColumn(
-        "reset",
-        F.when(F.col("id").isin(*seeds), F.lit(w)).otherwise(F.lit(0.0)),
-    )
-    return _iterate(edges, vertices, reset, num_iter, damping, src, dst, n_vertices=n)
+    return _iterate_fp(prepared, reset, num_iter)[0]

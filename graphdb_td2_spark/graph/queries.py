@@ -12,9 +12,8 @@ from ..io import load_tables, read_table
 from .build import GraphFrames, build_graph, event_typed_dedup
 from .pagerank import (
     FP_SCALE,
-    pagerank,
     pagerank_fp,
-    personalized_pagerank,
+    pagerank_fp_rounds,
     personalized_pagerank_fp,
 )
 from .superstep import symmetric_edges
@@ -282,21 +281,14 @@ def pagerank_convergence_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     The stopping-criterion evidence for the iterative tier: a geometric
     decay here is what justifies the fixed iteration count the production
     queries run with (and, at 100 TB, what an adaptive early-exit loop
-    would threshold on). Exact integers throughout — each delta is one
-    vertex-frame join + a 1-row aggregate inside the existing loop, so
-    the unrolled-CTE oracle reproduces the curve bit-for-bit.
+    would threshold on). Exact integers throughout — each delta is a
+    per-round aggregate of the power iteration itself, so the
+    unrolled-CTE oracle reproduces the curve bit-for-bit.
     """
-    g = cached_graph(spark, sf_dir)
-    deltas: list[int] = []
     # the final vector is discarded — the curve is the product here; the
     # run itself is the same pagerank_top20 loop (5 iterations)
-    pagerank_fp(
-        g.edges.select("src", "dst"),
-        num_iter=5,
-        track_deltas=deltas,
-        prepared=cached_fp_graph(spark, sf_dir),
-    )
+    _, rows = pagerank_fp_rounds(cached_fp_graph(spark, sf_dir), 5)
     return spark.createDataFrame(
-        [(i + 1, d) for i, d in enumerate(deltas)],
+        [(i + 1, r["l1_delta"]) for i, r in enumerate(rows)],
         "iter bigint, l1_delta_fp bigint",
     ).orderBy("iter")

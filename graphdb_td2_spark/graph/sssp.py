@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..caching import memo
 from .queries import cached_graph, cached_vertex_count, property_graph_parts
-from .superstep import min_send, run_supersteps
+from .superstep import edge_send, run_supersteps
 
 MAX_ROUNDS = 6
 SSSP_TOPK = 20
@@ -93,9 +93,9 @@ def sssp_distances(
             F.when(F.col("id") == seed, F.lit(0)).cast("long").alias("distance"),
         ),
         und,
-        min_send(F.col("distance") + F.col("w")),
+        edge_send(F.col("distance") + F.col("w")),
         # least() skips NULLs: min with unreached as infinity
-        merge=[F.least("msg", "distance").alias("distance")],
+        merge=lambda agg, step: [F.least("msg", "distance").alias("distance")],
         changed=F.col("msg").isNotNull()
         & (F.col("distance").isNull() | (F.col("msg") < F.col("distance"))),
         max_rounds=rounds,

@@ -25,7 +25,12 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for this engine.
+    """Build a SparkSession tuned for this engine, or return the live one.
+
+    A live session comes back unchanged: ``getOrCreate()`` would rewrite
+    its runtime confs (the shuffle width among them) under whatever it is
+    already running, so the confs below apply only to a session this call
+    creates.
 
     Honors ``SPARK_GRAFT_CPUS`` (driver contract) for local parallelism.
     All settings are safe on a real cluster: AQE, skew-join handling and
@@ -39,6 +44,9 @@ def get_spark(
     the machine; a floor above the core count only schedules idle tasks
     in those stages.
     """
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        return live
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:

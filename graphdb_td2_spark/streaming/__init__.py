@@ -17,7 +17,6 @@ from .core import (
     streaming_event_windows,
     streaming_session_windows,
     streaming_sliding_windows,
-    stream_sliding_value,
 )
 
 __all__ = [
@@ -37,5 +36,4 @@ __all__ = [
     "streaming_event_windows",
     "streaming_session_windows",
     "streaming_sliding_windows",
-    "stream_sliding_value",
 ]

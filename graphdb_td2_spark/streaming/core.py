@@ -227,27 +227,6 @@ def stream_event_type_windows(
     )
 
 
-def stream_sliding_value(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window mean event value per type (overlapping windows)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.avg("value").alias("avg_value"), F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "avg_value",
-            "n_events",
-        )
-    )
-
-
 def stream_session_windows(
     events: DataFrame,
     gap: str = SESSION_GAP,

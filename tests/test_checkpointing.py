@@ -64,24 +64,6 @@ def test_truncate_lineage_cuts_plan_in_both_modes(spark, tmp_path):
         use_local_checkpoints(spark)
 
 
-def test_state_partitions_budget(spark):
-    """The iteration-state partition budget: 1 partition until the state
-    clears STATE_ROWS_PER_PARTITION, then linear growth capped at the
-    session's default parallelism (the cluster-width ceiling that stops a
-    1B-vertex graph from scheduling tiny-task storms)."""
-    from graphdb_td2_spark.graph.checkpointing import (
-        STATE_ROWS_PER_PARTITION,
-        state_partitions,
-    )
-
-    df = spark.range(1)
-    width = spark.sparkContext.defaultParallelism
-    assert state_partitions(0, df) == 1
-    assert state_partitions(STATE_ROWS_PER_PARTITION - 1, df) == 1
-    assert state_partitions(8 * STATE_ROWS_PER_PARTITION, df) == min(width, 8)
-    assert state_partitions(10**9, df) == width
-
-
 def test_static_planning_blocks_exiting_out_of_order_restore_confs(spark):
     """Two overlapping blocks that exit out of order (enter A, enter B,
     exit A, exit B) leave AQE and the shuffle width as they were before

@@ -17,7 +17,6 @@ from graphdb_td2_spark.functions.vectors import (
     quantize_embedding,
 )
 from graphdb_td2_spark.functions.text import fingerprint_col
-from graphdb_td2_spark.graph.pagerank import pagerank, personalized_pagerank
 
 
 def test_exact_dedup_keeps_lowest_id(spark):
@@ -75,38 +74,6 @@ def test_hamming_distance(spark):
     df = spark.createDataFrame([(0b1010, 0b0011)], "a long, b long")
     out = df.select(hamming_distance(F.col("a"), F.col("b")).alias("h")).collect()
     assert out[0]["h"] == 2
-
-
-def test_pagerank_sums_to_one_and_ranks_sink_highest(spark):
-    # chain into a self-looped sink: no period-2 oscillation, 'sink'
-    # strictly dominates after a few iterations
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "sink"), ("c", "sink"), ("sink", "sink")],
-        "src string, dst string",
-    )
-    pr = pagerank(edges, num_iter=10).collect()
-    total = sum(r["rank"] for r in pr)
-    assert total == pytest.approx(1.0, abs=1e-6)
-    top = max(pr, key=lambda r: r["rank"])
-    assert top["id"] == "sink"
-
-
-def test_pagerank_dangling_mass_redistributed(spark):
-    # 'b' is dangling: its mass must recycle via teleport, keeping sum=1
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    pr = pagerank(edges, num_iter=8).collect()
-    assert sum(r["rank"] for r in pr) == pytest.approx(1.0, abs=1e-6)
-
-
-def test_personalized_pagerank_teleports_to_seed(spark):
-    edges = spark.createDataFrame(
-        [("s", "x"), ("x", "y"), ("y", "s"), ("z", "x")],
-        "src string, dst string",
-    )
-    pr = {r["id"]: r["rank"] for r in personalized_pagerank(edges, ["s"], num_iter=10).collect()}
-    # z is unreachable from the teleport set → rank ~0; seed keeps mass
-    assert pr["z"] == pytest.approx(0.0, abs=1e-9)
-    assert pr["s"] > pr["x"] * 0.5  # seed retains substantial mass
 
 
 def test_recommend_shape(spark, sf_dir):

@@ -1,4 +1,5 @@
-"""``get_spark``'s default shuffle width.
+"""``get_spark``'s default shuffle width, and that it leaves a live
+session alone.
 
 The shared ``spark`` fixture pins its own width, so the default is checked
 in a fresh process: the session is built once per JVM and its
@@ -39,3 +40,14 @@ def test_default_shuffle_width_is_cpu_count(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     width = out.stdout.split("WIDTH:")[1].splitlines()[0]
     assert width == "3"
+
+
+def test_get_spark_returns_live_session_unchanged(spark, monkeypatch):
+    """A second ``get_spark()`` (the CLI, a server) hands back the running
+    session without rewriting its confs: the fixture's width 8 stays."""
+    from graphdb_td2_spark.session import get_spark
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert get_spark() is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

@@ -1,6 +1,7 @@
 """The superstep operator (``graph/superstep.py``) runs exactly one Spark
 job per round: the job that materializes the round's lazily
-checkpointed state also counts the vertices that changed."""
+checkpointed state also counts the vertices that changed and evaluates
+the caller's aggregates."""
 
 from __future__ import annotations
 
@@ -33,3 +34,28 @@ def test_superstep_runs_one_job_per_round(spark):
     assert sorted(map(tuple, labels.collect())) == [
         (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 4)
     ]
+
+
+def test_aggregates_add_one_job_before_round_one(spark):
+    """With aggregates (PageRank's dangling mass) the operator runs one
+    more job, over the initial state, for round 0's aggregate row:
+    ``pagerank_fp`` runs ``num_iter + 1`` jobs over a prepared graph."""
+    from graphdb_td2_spark.graph.pagerank import pagerank_fp, prepare_fp_graph
+
+    # d is dangling, so every round redistributes a non-zero mass
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
+    )
+    prepared = prepare_fp_graph(edges)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("superstep-aggregate-jobs", "pagerank_fp")
+    try:
+        ranks = pagerank_fp(edges, num_iter=5, prepared=prepared)
+        jobs = tracker.getJobIdsForGroup("superstep-aggregate-jobs")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 5 + 1, f"5 iterations ran {len(jobs)} jobs"
+    assert sorted(map(tuple, ranks.collect())) == sorted(
+        map(tuple, pagerank_fp(edges, num_iter=5).collect())
+    )
